@@ -9,68 +9,21 @@ Prints the compact headline JSON as its own FINAL line:
 the whole line ≤ FINAL_LINE_BUDGET) and EVERYTHING bulky — the
 full-name full-precision timing map, per-query loadavg, errors — on
 the SEPARATE preceding detail line and in bench_partial.json / --out.
-Rounds 5 AND 6 both came back `parsed: null` because the final line
-carried an UNBOUNDED map and the driver's 2000-char tail-capture
-truncated it mid-object; rounds 7-13 dropped the map entirely, which
-left the driver's per_query/scaling comparison empty (round-13 VERDICT
-task 2). The rule now enforced by final_line() +
+Records are read by tail-capturing the last 2000 characters of stdout
+and parsing the final line, so an unbounded per-query map gets cut
+mid-object and the record parses as null, while no map at all leaves
+per-query comparisons empty. The rule enforced by final_line() +
 tests/test_bench_output.py: the final line's per-query map is compact
 (unique qNN keys, 0.01-rounded seconds, cost-descending) and HARD
 size-capped — overflow drops the cheapest entries into a "q_omitted"
 count, never the line.
 
-Flags:
-  --full        time EVERY registered query (the whole registry), not
-                just the HEADLINE subset — regressions in non-headline
-                families become visible per-round.
-  --only LIST   comma-separated query names: restrict the sweep to this
-                subset (iteration / targeted re-measurement).
-  --out PATH    also write the full payload to PATH (append-only
-                bench records: pass a fresh name per run, e.g.
-                bench_clean_r06_1.json — never overwrite a claimed
-                number's file).
-  --loadavg-gate [T]
-                self-qualifying records (round-8 VERDICT task 8): any
-                query whose pre-run 1-min loadavg exceeds T (default
-                8.0 — above what this bench generates alone on this
-                box) is listed in the payload's "load_flagged";
-                --composite then prefers unflagged records per query,
-                so one polluted record can't poison a committed min.
-  --canary-gate [T]
-                canary-drift qualification (round-10 VERDICT task 2):
-                host loadavg has a proven blind spot — the r10 76.5s
-                record showed uniform +60-90% inflation on untouched
-                queries at loadavg <3 ("invisible co-tenancy", likely
-                cgroup-capped neighbors that never show in the host
-                metric). Instead of a host metric, run a fixed CANARY
-                query (q01_pricing_summary) immediately before each
-                measured query and compare canary samples against the
-                record's own canary median: a query whose preceding
-                canary reads > T× the median (default 1.2) rode a
-                burst → listed in "canary_flagged" (composite prefers
-                clean samples, same as load_flagged). The record also
-                carries its canary median; --composite skips ENTIRE
-                records whose canary median is > T× the best record's
-                (uniform inflation — every sample poisoned), exactly
-                like hand-flagged records. The min-median record is
-                never skipped, so a composite always survives.
-  --ab-ref REF qA[,qB...][,reps]
-                one-command A/B against another git rev (the PERF.md
-                by-hand worktree recipe, promoted to a flag per round-8
-                VERDICT task 8): checks REF out into a temp worktree
-                and alternates `bench.py --only` SUBPROCESS runs
-                between the two trees, rep by rep, so a co-tenant
-                burst hits both arms; prints per-arm per-query minima.
-  --funnel-shared
-                after the main sweep, re-time the collapse-funnel
-                family (q56/q125/q144/q149/q150) with the shared
-                exact_collapsed_components stage cached ONCE across
-                them (dedup.FUNNEL_SHARED). The standalone numbers in
-                the main sweep are untouched (each registered query
-                must stand alone for the oracle); the shared-once
-                timings ride the detail line under "funnel_shared" —
-                per-query regression signal without 5× redundant
-                funnel wall. See PERF.md.
+Three modes (``python bench.py --help`` documents every flag):
+  sweep         the default: HEADLINE, --full or --only queries,
+                timed in this process
+  --ab-ref      interleaved A/B against another git rev, one
+                subprocess sweep per arm and rep
+  --composite   merge of committed sweep records, no Spark session
 
 Each query is materialized through the ``noop`` datasource sink — every
 column is computed (no count()-style projection pruning) and nothing is
@@ -79,6 +32,7 @@ collected to the driver, so timings measure engine work, not transfer.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -86,8 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: Canary-drift qualification (round-10 VERDICT task 2): the fixed
-#: probe query re-timed before every measured query under
+#: Canary-drift qualification: the fixed probe query re-timed before every measured query under
 #: --canary-gate, and the flag's default drift threshold. q01 is the
 #: canary because it is the cheapest stable full-scan aggregate in the
 #: registry (~0.3s at sf0.1): pure lineitem scan + hash agg, no joins,
@@ -103,13 +56,13 @@ def canary_flags(
     """Queries whose preceding canary sample reads > gate× the record's
     own canary median — they rode a co-tenant burst.
 
-    The canary query itself is EXEMPT from its own flagging (round-11
-    ADVICE): its preceding canary is the record's first in-sweep sample
-    and reads high in EVERY record (residual first-sample warmth the
-    discard run does not fully absorb — all four clean r11 records),
-    so flagging it is structural, not burst detection, and it left the
-    canary query with zero clean composite samples all round. A real
-    burst on its measurement is still shed by min-across-records."""
+    The canary query itself is EXEMPT from its own flagging: its
+    preceding canary is the record's first in-sweep sample and reads
+    high in EVERY record (residual first-sample warmth the discard run
+    does not fully absorb), so flagging it is structural, not burst
+    detection, and would leave the canary query with zero clean
+    composite samples. A real burst on its measurement is still shed by
+    min-across-records."""
     return sorted(
         q
         for q, t in samples.items()
@@ -161,17 +114,16 @@ HEADLINE = [
     "q112_temperature_mixture",
     "q113_length_histogram",
     "q114_bigram_logprob",
-    # sketch family (round 5): quantile summary + heavy hitters
+    # sketch family: quantile summary + heavy hitters
     "q84_approx_quantiles",
     "q121_heavy_hitters",
-    # semantic tier of the dedup funnel (round 5)
+    # semantic tier of the dedup funnel
     "q123_semantic_dedup",
-    # round-5 session 2: DSIR weights, dedup audit, margin mining
+    # DSIR weights, dedup audit, margin mining
     "q124_dsir_importance",
     "q125_dedup_impact_audit",
     "q126_margin_pair_mining",
-    # round-5 session 3: classifier filter, KL mixture diagnostic,
-    # sequence chunking
+    # classifier filter, KL mixture diagnostic, sequence chunking
     "q127_classifier_quality_filter",
     "q128_source_kl_divergence",
     "q129_sequence_chunking",
@@ -183,7 +135,7 @@ HEADLINE = [
     "q135_unpivot_doc_metrics",
     "q136_order_distribution_stats",
     "q137_props_schema_parse",
-    # round 6: ANN-bounded margin mining (the q126 scale fix), its
+    # ANN-bounded margin mining (the q126 scale fix), its
     # recall audit, and the iterative BPE loop
     "q138_margin_pair_mining_ann",
     "q139_bpe_merge_iterations",
@@ -191,7 +143,7 @@ HEADLINE = [
     "q141_bpe_compression_curve",
     "q142_embedding_quant_audit",
     "q143_ivf_cell_balance",
-    # round 6 session 2: leak-free split, signal correlation, n-gram
+    # leak-free split, signal correlation, n-gram
     # novelty, rule-ablation matrix
     "q144_leak_free_split",
     "q145_quality_signal_correlation",
@@ -200,7 +152,7 @@ HEADLINE = [
     "q148_winnowed_novelty",
     "q149_component_source_purity",
     "q150_quality_survivor_delta",
-    # round 8: joint text↔embedding dedup agreement, ANN ingest gate
+    # joint text↔embedding dedup agreement, ANN ingest gate
     "q151_joint_dedup_agreement",
     "q152_ann_admission",
 ]
@@ -209,21 +161,16 @@ HEADLINE = [
 def detail_line(payload: dict) -> dict:
     """Everything bulky rides this SECOND-TO-LAST line: the FULL-NAME
     full-precision per-query timing map, loadavg detail, and errors.
-    BENCH_r05 and BENCH_r06 both came back ``parsed: null`` because the
-    final line carried this unbounded form and the driver's tail-capture
-    truncated it mid-object.  Nothing unbounded may ride the final line
-    — its per-query map is the compact size-capped encoding
+    On the final line this unbounded form would be cut mid-object by
+    the 2000-char tail capture.  Nothing unbounded may ride the final
+    line — its per-query map is the compact size-capped encoding
     (:func:`final_line`)."""
     detail = {
         "queries": payload["queries"],
         "loadavg_detail": payload.get("loadavg", {}),
     }
-    if payload.get("funnel_shared"):
-        detail["funnel_shared"] = payload["funnel_shared"]
     if payload.get("extra_samples"):
         detail["extra_samples"] = payload["extra_samples"]
-    if payload.get("load_flagged"):
-        detail["load_flagged"] = payload["load_flagged"]
     if payload.get("canary"):
         detail["canary"] = payload["canary"]
     if payload.get("canary_flagged"):
@@ -254,11 +201,10 @@ FINAL_LINE_BUDGET = 1950
 
 def final_line(payload: dict) -> dict:
     """The compact FINAL line: fixed scalar keys (≤200 bytes, asserted)
-    PLUS a size-bounded per-query map (round-13 VERDICT task 2: the
-    driver parses ONLY this line, so without the map PERF_r*.json's
-    per_query/scaling comparison has been empty since round 5).
+    PLUS a size-bounded per-query map: the record reader parses ONLY
+    this line, so without the map there is no per-query comparison.
 
-    The map uses the COMPACT ENCODING the driver window forces: keys
+    The map uses the COMPACT ENCODING the tail window forces: keys
     are the unique ``qNN`` prefix of each registered name (full name
     kept only if a prefix ever collided), values are seconds rounded
     to 0.01, entries ordered by descending cost. 149 entries ≈ 1.8 KB;
@@ -280,37 +226,36 @@ def final_line(payload: dict) -> dict:
         "n_queries": len(payload["queries"]),
         "sf": os.path.basename(str(payload["sf"]).rstrip("/"))[:32],
     }
-    # ambient-load context (round-9 VERDICT task 7): the driver's
-    # BENCH_r{N}.json keeps only this line, and cross-round wall-clock
-    # deltas are dominated by co-tenant load on this box — two bounded
-    # scalars make every driver artifact self-documenting. Clamped so a
-    # pathological loadavg can never outgrow the tail-capture window.
+    # ambient-load context: a tail-captured record keeps only this
+    # line, and cross-record wall-clock deltas are dominated by
+    # co-tenant load — two bounded scalars make every record
+    # self-documenting. Clamped so a pathological loadavg can never
+    # outgrow the tail-capture window.
     la = payload.get("loadavg")
     if la and "start" in la and "end" in la:
         compact["load"] = f"{la['start']:.1f}/{la['end']:.1f}"[:16]
-    # era self-normalization (round-10 VERDICT task 3): cross-round
-    # BENCH_rN diffs are dominated by machine era on this co-tenant box
-    # (r10 79.95s vs r8 73.58s read as a regression that the interleaved
-    # A/B disproved, code_ratio 0.997). The committed composite's era
-    # block already computes machine_era_ratio (prior-round HEAD
-    # re-benched today vs its committed composite, >1 = today's box
-    # slower); surfacing it on the driver-visible line makes the
-    # artifact self-normalizing: divide cross-round deltas by it.
-    # main() attaches "era_ref" from the newest committed composite.
+    # era self-normalization: cross-record diffs on a co-tenant box are
+    # dominated by machine era (a +8.7% headline once read as a
+    # regression that the interleaved A/B disproved, code_ratio 0.997).
+    # The committed composite's era block already computes
+    # machine_era_ratio (the prior HEAD re-benched today vs its
+    # committed composite, >1 = today's box slower); surfacing it on
+    # the final line makes the record self-normalizing: divide
+    # cross-record deltas by it. run_sweep() attaches "era_ref" from the
+    # newest committed composite.
     era = payload.get("machine_era") or payload.get("era_ref") or {}
     ratio = era.get("machine_era_ratio")
     if isinstance(ratio, (int, float)):
         compact["era"] = round(float(ratio), 3)
-    # bench self-qualification (round-11 VERDICT task 2): the PLAIN
-    # driver sweep is neither canary-gated nor min-composited, so its
-    # headline is load-of-the-day with nothing in the artifact to
-    # qualify it by. One canary timing immediately before and one
-    # immediately after the sweep ride the final line as a bounded
-    # "pre/post" string: an outside reader of BENCH_rN alone can now
-    # reject a co-tenant-polluted record at ~2s cost instead of the
-    # full per-query gate. Read the probes POSITIONALLY against other
-    # records' probes, not against each other: the canary query keeps
-    # warming with repetition across a sweep (measured r12: pre ≈1.65,
+    # bench self-qualification: a PLAIN sweep is neither canary-gated
+    # nor min-composited, so its headline is load-of-the-day with
+    # nothing in the record to qualify it by. One canary timing
+    # immediately before and one immediately after the sweep ride the
+    # final line as a bounded "pre/post" string: a reader of the final
+    # line alone can reject a co-tenant-polluted record at ~2s cost
+    # instead of the full per-query gate. Read the probes POSITIONALLY
+    # against other records' probes, not against each other: the canary
+    # query keeps warming with repetition across a sweep (measured: pre ≈1.65,
     # in-sweep median ≈1.07, post ≈0.9 on two consecutive clean
     # records), so pre is structurally the higher reading — a clean
     # box gives consistent pre-vs-pre and post-vs-post across records,
@@ -319,7 +264,7 @@ def final_line(payload: dict) -> dict:
     if isinstance(pre, (int, float)) and isinstance(post, (int, float)):
         # bound each probe individually — truncating the JOINED string
         # garbled large values into a misleading prefix ("99999.12/99"
-        # reads as post=99; round-12 ADVICE). 9999s ≈ 2.8h per probe is
+        # reads as post=99). 9999s ≈ 2.8h per probe is
         # far past anything a canary query can honestly read.
         compact["canary"] = "/".join(
             f"{min(float(v), 9999.0):.2f}" for v in (pre, post)
@@ -365,12 +310,12 @@ def dump_line(obj: dict) -> str:
 
 
 def machine_era(ab_path: str, baseline_path: str) -> dict:
-    """Fold a cross-tree ``--ab-ref`` record + the PRIOR round's committed
-    composite into the era-normalization block the round-9 VERDICT asked
-    for (task 2): cross-round wall-clock drifts on this co-tenant box are
-    dominated by machine era, not code, and the committed composite alone
-    misleads naive cross-round diffs (64.28s r8 → 70.54s r9 on identical
-    code paths).  Two ratios make the artifact self-normalizing:
+    """Fold a cross-tree ``--ab-ref`` record + the PRIOR committed
+    composite into an era-normalization block: cross-record wall-clock
+    drifts on a co-tenant box are dominated by machine era, not code,
+    and the committed composite alone misleads naive cross-record diffs
+    (64.28s → 70.54s once on identical code paths).  Two ratios make
+    the record self-normalizing:
 
       machine_era_ratio   — prior-round HEAD re-benched TODAY (the ab-ref
                             arm) vs the SAME queries in the prior round's
@@ -416,17 +361,15 @@ def machine_era(ab_path: str, baseline_path: str) -> dict:
 def latest_committed_era(repo: str) -> dict | None:
     """Era block from the NEWEST committed ``bench_composite_r*.json``
     that carries one — the source of the final line's "era" key on
-    plain sweeps (round-10 VERDICT task 3).  The driver's BENCH_rN.json
-    keeps only the final line, so without this a naive BENCH_r10-vs-r08
-    diff reads machine era as a code regression.
+    plain sweeps.  A tail-captured record keeps only the final line, so
+    without this a naive cross-record diff reads machine era as a code
+    regression.
 
-    Searched in ``bench_records/`` (where round records live since
-    round 12 — the repo root is the driver-facing surface) and the repo
-    root itself (in-progress records of the current round). A same-round
-    composite present in BOTH places ties on round number; the tie
-    breaks to ``bench_records/`` — the committed history — so an
-    in-progress root record never shadows the committed one
-    (round-12 ADVICE)."""
+    Searched in ``bench_records/`` (the committed history) and the repo
+    root itself (in-progress records). A composite present in BOTH
+    places ties on its ``_rN`` number; the tie breaks to
+    ``bench_records/`` so an in-progress root record never shadows the
+    committed one."""
     import glob
     import re
 
@@ -462,25 +405,23 @@ def latest_committed_era(repo: str) -> dict | None:
 
 
 def composite(record_paths: list[str]) -> dict:
-    """Merge per-query MINS across a round's clean bench records into
-    one payload with the same keys as a clean record — the number every
-    round-end analysis recomputed by hand (round-7 VERDICT task 7): the
-    per-query min across spaced runs is the engine's actual cost on a
-    co-tenant box, burst-free by construction. Only queries present in
-    EVERY record ride the composite (a query added mid-round has no
+    """Merge per-query MINS across clean bench records into one payload
+    with the same keys as a clean record: the per-query min across
+    spaced runs is the engine's actual cost on a co-tenant box,
+    burst-free by construction. Only queries present in EVERY record
+    ride the composite (a query added between records has no
     cross-record min)."""
     records = []
     kept_paths = []
     skipped = []  # (path, reason) — full paths, not basenames: two
     # different directories can share a basename, and a clean record
     # must never be dropped because a FLAGGED record elsewhere happens
-    # to be named the same (round-10 ADVICE)
+    # to be named the same
     loaded: list[tuple[str, dict]] = []
     for p in record_paths:
         with open(p) as fh:
             loaded.append((p, json.load(fh)))
-    # canary-drift record qualification (round-10 VERDICT task 2): a
-    # record whose canary median reads > gate× the BEST record's canary
+    # canary-drift record qualification: a record whose canary median reads > gate× the BEST record's canary
     # median was taken under uniform co-tenant inflation — every sample
     # in it is poisoned, so it is skipped whole, like a hand-flagged
     # record. The best record is never skipped (ratio 1.0), so at least
@@ -494,7 +435,7 @@ def composite(record_paths: list[str]) -> dict:
     }
     best_canary = min(canary_meds.values()) if canary_meds else None
     # mixing canary-gated and ungated records bypasses whole-record
-    # qualification (round-11 ADVICE): an ungated record taken under
+    # qualification: an ungated record taken under
     # uniform inflation carries no canary median to skip it by, yet its
     # per-query samples still compete for every min — warn loudly so a
     # committed composite is never silently built on such a mix
@@ -514,8 +455,8 @@ def composite(record_paths: list[str]) -> dict:
             )
     for p, rec in loaded:
         # a record hand-marked "flagged": true (e.g. uniform co-tenant
-        # inflation that stayed under the loadavg gate) never rides a
-        # composite, even if passed on the command line
+        # inflation that no gate caught) never rides a composite, even
+        # if passed on the command line
         if rec.get("flagged"):
             skipped.append((p, "hand-flagged"))
             continue
@@ -537,12 +478,13 @@ def composite(record_paths: list[str]) -> dict:
     common = set(records[0]["queries"])
     for r in records[1:]:
         common &= set(r["queries"])
-    # self-qualifying records (--loadavg-gate / --canary-gate): a record
-    # that flagged a query as load- or canary-polluted is excluded from
-    # that query's min when at least one clean sample exists — one
-    # co-tenant burst can no longer poison a committed composite entry
+    # self-qualifying records: a record that flagged a query as canary-
+    # polluted (--canary-gate), or load-polluted ("load_flagged", set by
+    # the retired host-loadavg gate in older committed records), is
+    # excluded from that query's min when at least one clean sample
+    # exists — one co-tenant burst cannot poison a composite entry
     # "stale_queries": queries whose CODE changed after the record was
-    # taken (hand-annotated mid-round) — their samples measure a tree
+    # taken (hand-annotated) — their samples measure a tree
     # that no longer exists and must not ride the min when any
     # fresh-tree record has the query
     def _samples(name: str) -> list[float]:
@@ -555,7 +497,7 @@ def composite(record_paths: list[str]) -> dict:
         ]
         if not clean:
             # the min MUST NOT silently ride flagged/stale samples
-            # without visibility (round-10 ADVICE): every sample for
+            # without visibility: every sample for
             # this query was disqualified, so the fallback min below
             # measures a polluted or stale tree — say so.
             print(
@@ -578,301 +520,304 @@ def composite(record_paths: list[str]) -> dict:
     }
 
 
-def main() -> None:
-    full = "--full" in sys.argv
-    # these flags are parsed only inside the --composite branch; given
-    # without it they would be silently ignored and the operator would
-    # commit a record believing its audit/era block ran (review find)
-    for flag in ("--audit-against", "--era-ab", "--era-baseline"):
-        if flag in sys.argv and "--composite" not in sys.argv:
-            sys.exit(f"{flag} requires --composite")
-    out_path = None
-    if "--out" in sys.argv:
-        idx = sys.argv.index("--out")
-        if idx + 1 >= len(sys.argv) or sys.argv[idx + 1].startswith("--"):
-            sys.exit("usage: bench.py [--full] [--out PATH]")
-        out_path = sys.argv[idx + 1]
-    if "--composite" in sys.argv:
-        # pure file merge — no Spark session
-        idx = sys.argv.index("--composite")
-        paths = []
-        for a in sys.argv[idx + 1 :]:
-            if a.startswith("--"):  # next flag (e.g. --out) ends the list
-                break
-            paths.append(a)
-        if not paths:
-            sys.exit("usage: bench.py --composite rec1.json rec2.json ...")
-        payload = composite(paths)
-        # --era-ab AB.json --era-baseline PRIOR_COMPOSITE.json: attach the
-        # machine-era normalization block (round-9 VERDICT task 2); both
-        # flags or neither — a ratio without its baseline is meaningless
-        has_ab = "--era-ab" in sys.argv
-        has_base = "--era-baseline" in sys.argv
-        if has_ab != has_base:
-            sys.exit(
-                "--era-ab and --era-baseline must be given together"
-            )
-        if has_ab:
-            ai = sys.argv.index("--era-ab")
-            bi = sys.argv.index("--era-baseline")
-            if ai + 1 >= len(sys.argv) or bi + 1 >= len(sys.argv):
-                sys.exit(
-                    "usage: bench.py --composite recs... --era-ab AB.json "
-                    "--era-baseline PRIOR.json"
-                )
-            payload["machine_era"] = machine_era(
-                sys.argv[ai + 1], sys.argv[bi + 1]
-            )
-        # --audit-against PRIOR.json [T]: the per-query regression audit
-        # every round recomputed by hand (round-12 VERDICT task 2) —
-        # compare this composite's per-query values against a prior
-        # round's committed composite and EMBED the result in the
-        # payload, so the committed artifact carries its own audit
-        # instead of a PERF.md claim.
-        if "--audit-against" in sys.argv:
-            ai = sys.argv.index("--audit-against")
-            if ai + 1 >= len(sys.argv) or sys.argv[ai + 1].startswith("--"):
-                sys.exit(
-                    "usage: bench.py --composite recs... "
-                    "--audit-against PRIOR.json [T]"
-                )
-            prior_path = sys.argv[ai + 1]
-            thr = 1.2
-            if ai + 2 < len(sys.argv) and not sys.argv[ai + 2].startswith(
-                "--"
-            ):
-                # after PRIOR.json the only legal positional is the
-                # threshold — an unparsable one must fail LOUDLY, not
-                # silently audit at the 1.2 default (the --loadavg-gate
-                # rule: an operator who typed a gate believes it's on)
-                try:
-                    thr = float(sys.argv[ai + 2])
-                except ValueError:
-                    sys.exit(
-                        f"--audit-against: bad threshold "
-                        f"{sys.argv[ai + 2]!r} (expected a float)"
-                    )
-            with open(prior_path) as fh:
-                prior_q = json.load(fh)["queries"]
-            shared = sorted(set(payload["queries"]) & set(prior_q))
-            regressed = {
-                q: {
-                    "prior": prior_q[q],
-                    "now": payload["queries"][q],
-                    "ratio": round(payload["queries"][q] / prior_q[q], 3),
-                }
-                for q in shared
-                if prior_q[q] > 0
-                and payload["queries"][q] / prior_q[q] > thr
-            }
-            payload["regression_audit"] = {
-                "against": os.path.basename(prior_path),
-                "threshold": thr,
-                "n_shared": len(shared),
-                "n_only_now": len(set(payload["queries"]) - set(prior_q)),
-                "n_only_prior": len(set(prior_q) - set(payload["queries"])),
-                "regressed": regressed,
-            }
-            for q, row in sorted(regressed.items()):
-                print(
-                    f"audit: {q} {row['prior']}s -> {row['now']}s "
-                    f"({row['ratio']}x)",
-                    file=sys.stderr,
-                )
-            print(
-                f"audit: {len(regressed)}/{len(shared)} shared queries "
-                f"> {thr}x vs {os.path.basename(prior_path)}",
-                file=sys.stderr,
-            )
-        if out_path:
-            with open(out_path, "w") as fh:
-                json.dump(payload, fh, indent=1)
-        print(json.dumps(detail_line(payload)))
-        print(dump_line(final_line(payload)))
-        return
-    ab_names = None
-    if "--ab" in sys.argv:
-        idx = sys.argv.index("--ab")
-        if idx + 1 >= len(sys.argv):
-            sys.exit("usage: bench.py --ab qA,qB[,reps]")
-        parts = sys.argv[idx + 1].split(",")
-        if len(parts) < 2:
-            sys.exit("usage: bench.py --ab qA,qB[,reps]")
-        ab_names = (parts[0], parts[1], int(parts[2]) if len(parts) > 2 else 3)
-    only_names = None
-    if "--only" in sys.argv:
-        idx = sys.argv.index("--only")
-        if idx + 1 >= len(sys.argv):
-            sys.exit("usage: bench.py --only q1,q2,...")
-        only_names = [
-            p.strip() for p in sys.argv[idx + 1].split(",") if p.strip()
-        ]
-    canary_gate = None
-    if "--canary-gate" in sys.argv:
-        idx = sys.argv.index("--canary-gate")
-        canary_gate = CANARY_GATE_DEFAULT
-        if idx + 1 < len(sys.argv) and not sys.argv[idx + 1].startswith(
-            "--"
-        ):
-            try:
-                canary_gate = float(sys.argv[idx + 1])
-            except ValueError:
-                sys.exit(
-                    f"--canary-gate: unparsable threshold "
-                    f"{sys.argv[idx + 1]!r} (expected a float, e.g. 1.2)"
-                )
-        if canary_gate <= 1.0:
-            sys.exit("--canary-gate: threshold must be > 1.0")
-    loadavg_gate = None
-    if "--loadavg-gate" in sys.argv:
-        idx = sys.argv.index("--loadavg-gate")
-        loadavg_gate = 8.0
-        if idx + 1 < len(sys.argv) and not sys.argv[idx + 1].startswith(
-            "--"
-        ):
-            # a malformed threshold must not silently fall back to the
-            # default — the operator would believe a custom gate is active
-            try:
-                loadavg_gate = float(sys.argv[idx + 1])
-            except ValueError:
-                sys.exit(
-                    f"--loadavg-gate: unparsable threshold "
-                    f"{sys.argv[idx + 1]!r} (expected a float, e.g. 8.0)"
-                )
-    if "--ab-ref" in sys.argv:
-        # A/B a query set against another git rev — two temp-worktree
-        # SUBPROCESS arms, interleaved rep by rep. No Spark session in
-        # this process; each arm pays its own session spin-up but the
-        # measured number is the arm's own min-of-2 within-process.
-        import subprocess
-        import tempfile
+def _query_list(text: str) -> list[str]:
+    return [n.strip() for n in text.split(",") if n.strip()]
 
-        idx = sys.argv.index("--ab-ref")
-        if idx + 2 >= len(sys.argv):
-            sys.exit("usage: bench.py --ab-ref REF qA[,qB...][,reps]")
-        ref = sys.argv[idx + 1]
+
+def _canary_threshold(text: str) -> float:
+    try:
+        gate = float(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"unparsable threshold {text!r} (expected a float, e.g. 1.2)"
+        ) from None
+    if not gate > 1.0:
+        raise argparse.ArgumentTypeError("threshold must be > 1.0")
+    return gate
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse the command line. Every misuse exits through
+    ``parser.error``: a flag that was silently ignored would leave the
+    operator committing a record in the belief that its gate, audit or
+    era block ran."""
+    parser = argparse.ArgumentParser(
+        prog="bench.py",
+        description="Time registered setu_spark queries through the noop "
+        "sink; the final stdout line is the compact headline record.",
+        # a prefix such as --ab must never silently select --ab-ref
+        allow_abbrev=False,
+    )
+    parser.add_argument(
+        "--full",
+        action="store_true",
+        help="time EVERY registered query, not just the HEADLINE subset, "
+        "so regressions outside the headline families show",
+    )
+    parser.add_argument(
+        "--only",
+        type=_query_list,
+        metavar="q1,q2,...",
+        help="restrict the sweep to these comma-separated query names",
+    )
+    parser.add_argument(
+        "--out",
+        metavar="PATH",
+        help="also write the full payload to PATH. Records are "
+        "append-only: pass a fresh name per run and never overwrite the "
+        "file behind a claimed number",
+    )
+    parser.add_argument(
+        "--canary-gate",
+        nargs="?",
+        const=CANARY_GATE_DEFAULT,
+        type=_canary_threshold,
+        metavar="T",
+        help="run the fixed canary query (q01_pricing_summary) right "
+        "before each measured query. A query whose canary reads > T x the "
+        "record's canary median (default %(const)s) rode a co-tenant "
+        "burst and is listed in canary_flagged; --composite prefers clean "
+        "samples and skips whole records whose canary median is > T x the "
+        "best record's (uniform inflation that host loadavg does not "
+        "show, e.g. cgroup-capped neighbours)",
+    )
+    mode = parser.add_mutually_exclusive_group()
+    mode.add_argument(
+        "--ab-ref",
+        nargs=2,
+        metavar=("REF", "qA[,qB...][,reps]"),
+        help="A/B the queries against git rev REF: check REF out into a "
+        "temp worktree and alternate `bench.py --only` subprocess runs "
+        "between the two trees rep by rep (default 3 reps, arm order "
+        "reversed every other rep), so a co-tenant burst hits both arms; "
+        "prints per-arm per-query minima",
+    )
+    mode.add_argument(
+        "--composite",
+        nargs="+",
+        metavar="REC",
+        help="merge per-query mins across clean sweep records, skipping "
+        "hand-flagged and canary-inflated records and flagged or stale "
+        "samples; no Spark session",
+    )
+    parser.add_argument(
+        "--era-ab",
+        metavar="AB.json",
+        help="with --composite and --era-baseline: attach the "
+        "machine_era block from an --ab-ref record",
+    )
+    parser.add_argument(
+        "--era-baseline",
+        metavar="PRIOR.json",
+        help="with --composite and --era-ab: the prior committed "
+        "composite the ab-ref arm is compared against",
+    )
+    parser.add_argument(
+        "--audit-against",
+        nargs="+",
+        metavar=("PRIOR.json", "T"),
+        help="with --composite: embed a regression audit listing every "
+        "query slower than T x (default 1.2) its value in PRIOR.json",
+    )
+    args = parser.parse_args(argv)
+    if args.composite is None:
+        for flag in ("--audit-against", "--era-ab", "--era-baseline"):
+            if getattr(args, flag[2:].replace("-", "_")) is not None:
+                parser.error(f"{flag} requires --composite")
+    if (args.era_ab is None) != (args.era_baseline is None):
+        # a ratio without its baseline is meaningless
+        parser.error("--era-ab and --era-baseline must be given together")
+    if args.audit_against is not None:
+        if len(args.audit_against) > 2:
+            parser.error("usage: --audit-against PRIOR.json [T]")
+        prior, *rest = args.audit_against
+        try:
+            thr = float(rest[0]) if rest else 1.2
+        except ValueError:
+            parser.error(
+                f"--audit-against: bad threshold {rest[0]!r} "
+                "(expected a float)"
+            )
+        args.audit_against = (prior, thr)
+    if args.ab_ref is not None:
+        ref, spec = args.ab_ref
         if ref.lower() == "head":
             # the local tree's arm key is literally 'head'; a ref named
             # HEAD would collide in the arms dict and silently drop one arm
-            sys.exit(
+            parser.error(
                 "--ab-ref: REF must not be 'head' (that IS the local arm); "
                 "pass a commit SHA, branch, or tag"
             )
-        parts = sys.argv[idx + 2].split(",")
+        names = spec.split(",")
         reps = 3
-        if parts and parts[-1].isdigit():
-            reps = int(parts[-1])
-            parts = parts[:-1]
-        if not parts:
-            sys.exit("usage: bench.py --ab-ref REF qA[,qB...][,reps]")
-        repo = os.path.dirname(os.path.abspath(__file__))
-        # key the worktree path by the RESOLVED commit SHA, not the ref
-        # name: a branch that moved since the worktree was created, or two
-        # refs that sanitize identically (feat/x vs feat_x), would silently
-        # A/B the wrong tree under a name-keyed path
-        sha = subprocess.run(
-            ["git", "-C", repo, "rev-parse", "--verify", ref + "^{commit}"],
-            capture_output=True, text=True, check=True,
+        if names and names[-1].isdigit():
+            reps = int(names.pop())
+        if not names:
+            parser.error("usage: bench.py --ab-ref REF qA[,qB...][,reps]")
+        args.ab_ref = (ref, names, reps)
+    return args
+
+
+def _write_out(payload: dict, out_path: str | None) -> None:
+    if out_path:
+        with open(out_path, "w") as fh:
+            json.dump(payload, fh, indent=1)
+
+
+def run_composite(args: argparse.Namespace) -> None:
+    payload = composite(args.composite)
+    if args.era_ab:
+        payload["machine_era"] = machine_era(args.era_ab, args.era_baseline)
+    if args.audit_against:
+        # compare this composite's per-query values against a prior
+        # committed composite and EMBED the result, so the committed
+        # artifact carries its own audit instead of a prose claim
+        prior_path, thr = args.audit_against
+        with open(prior_path) as fh:
+            prior_q = json.load(fh)["queries"]
+        shared = sorted(set(payload["queries"]) & set(prior_q))
+        regressed = {
+            q: {
+                "prior": prior_q[q],
+                "now": payload["queries"][q],
+                "ratio": round(payload["queries"][q] / prior_q[q], 3),
+            }
+            for q in shared
+            if prior_q[q] > 0
+            and payload["queries"][q] / prior_q[q] > thr
+        }
+        payload["regression_audit"] = {
+            "against": os.path.basename(prior_path),
+            "threshold": thr,
+            "n_shared": len(shared),
+            "n_only_now": len(set(payload["queries"]) - set(prior_q)),
+            "n_only_prior": len(set(prior_q) - set(payload["queries"])),
+            "regressed": regressed,
+        }
+        for q, row in sorted(regressed.items()):
+            print(
+                f"audit: {q} {row['prior']}s -> {row['now']}s "
+                f"({row['ratio']}x)",
+                file=sys.stderr,
+            )
+        print(
+            f"audit: {len(regressed)}/{len(shared)} shared queries "
+            f"> {thr}x vs {os.path.basename(prior_path)}",
+            file=sys.stderr,
+        )
+    _write_out(payload, args.out)
+    print(json.dumps(detail_line(payload)))
+    print(dump_line(final_line(payload)))
+
+
+def run_ab_ref(args: argparse.Namespace) -> None:
+    """Two temp-worktree SUBPROCESS arms, interleaved rep by rep. No
+    Spark session in this process; each arm pays its own session
+    spin-up, and the measured number is the arm's own within-process
+    min."""
+    import subprocess
+    import tempfile
+
+    ref, parts, reps = args.ab_ref
+    repo = os.path.dirname(os.path.abspath(__file__))
+    # key the worktree path by the RESOLVED commit SHA, not the ref
+    # name: a branch that moved since the worktree was created, or two
+    # refs that sanitize identically (feat/x vs feat_x), would silently
+    # A/B the wrong tree under a name-keyed path
+    sha = subprocess.run(
+        ["git", "-C", repo, "rev-parse", "--verify", ref + "^{commit}"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    wt = os.path.join(tempfile.gettempdir(), "setu_ab_" + sha[:16])
+    if os.path.isdir(wt):
+        wt_head = subprocess.run(
+            ["git", "-C", wt, "rev-parse", "HEAD"],
+            capture_output=True, text=True,
         ).stdout.strip()
-        wt = os.path.join(tempfile.gettempdir(), "setu_ab_" + sha[:16])
-        if os.path.isdir(wt):
-            wt_head = subprocess.run(
-                ["git", "-C", wt, "rev-parse", "HEAD"],
-                capture_output=True, text=True,
-            ).stdout.strip()
-            if wt_head != sha:
-                subprocess.run(
-                    ["git", "-C", wt, "checkout", "--detach", sha],
-                    check=True,
-                )
-        else:
+        if wt_head != sha:
             subprocess.run(
-                ["git", "-C", repo, "worktree", "add", "--detach", wt, sha],
+                ["git", "-C", wt, "checkout", "--detach", sha],
                 check=True,
             )
-        # an arm whose bench.py predates --only would IGNORE the flag
-        # and sweep its whole headline set — refuse loudly instead
-        with open(os.path.join(wt, "bench.py")) as fh:
-            if "--only" not in fh.read():
-                sys.exit(
-                    f"--ab-ref: {ref}'s bench.py has no --only support; "
-                    "pick a ref at or after round 9"
-                )
-        arms = {"head": repo, ref: wt}
-        runs_ref: dict[str, dict[str, list[float]]] = {
-            a: {q: [] for q in parts} for a in arms
-        }
-        # alternate arm order per rep: a fixed head-first order hands the
-        # second arm every warm-cache/load-ramp advantage (the round-9
-        # phantom-regression lesson, measured again as a ~5% drift on
-        # untouched queries in ab_r13opt_final.json)
-        arm_order = list(arms.items())
-        for rep in range(reps):
-            for arm, path in (
-                arm_order if rep % 2 == 0 else arm_order[::-1]
-            ):
-                with tempfile.NamedTemporaryFile(
-                    suffix=".json", delete=False
-                ) as tf:
-                    tmp = tf.name
-                cmd = [
-                    sys.executable,
-                    os.path.join(path, "bench.py"),
-                    "--only",
-                    ",".join(parts),
-                    "--out",
-                    tmp,
-                ]
-                subprocess.run(
-                    cmd, cwd=path, check=True,
-                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-                )
-                with open(tmp) as fh:
-                    rec = json.load(fh)
-                os.unlink(tmp)
-                for q in parts:
-                    if q in rec["queries"]:
-                        runs_ref[arm][q].append(rec["queries"][q])
-                print(
-                    f"[bench] ab-ref rep {rep + 1}/{reps} arm {arm}: "
-                    + ", ".join(
-                        f"{q}={rec['queries'].get(q)}" for q in parts
-                    ),
-                    file=sys.stderr,
-                )
-        payload = {
-            "metric": "ab_ref_min",
-            "value": 0.0,
-            "unit": "sec",
-            "queries": {
-                f"{a}:{q}": round(min(r), 3) if r else None
-                for a, qs in runs_ref.items()
-                for q, r in qs.items()
-            },
-            "sf": os.environ.get(
-                "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-            ),
-            "ab_ref": ref,
-            "ab_runs": runs_ref,
-        }
-        if out_path:
-            with open(out_path, "w") as fh:
-                json.dump(payload, fh, indent=1)
-        print(json.dumps({"ab_ref": ref, "ab_runs": runs_ref}))
-        print(
-            json.dumps(
-                {
-                    "metric": "ab_ref_min",
-                    "arms": {
-                        a: round(
-                            sum(min(r) for r in qs.values() if r), 3
-                        )
-                        for a, qs in runs_ref.items()
-                    },
-                }
-            )
+    else:
+        subprocess.run(
+            ["git", "-C", repo, "worktree", "add", "--detach", wt, sha],
+            check=True,
         )
-        return
+    # an arm whose bench.py predates --only would IGNORE the flag
+    # and sweep its whole headline set — refuse loudly instead
+    with open(os.path.join(wt, "bench.py")) as fh:
+        if "--only" not in fh.read():
+            sys.exit(f"--ab-ref: {ref}'s bench.py has no --only support")
+    arms = {"head": repo, ref: wt}
+    runs_ref: dict[str, dict[str, list[float]]] = {
+        a: {q: [] for q in parts} for a in arms
+    }
+    # alternate arm order per rep: a fixed head-first order hands the
+    # second arm every warm-cache/load-ramp advantage (measured as a
+    # phantom regression of +0.6-1.2s on the funnel family, and as a
+    # ~5% drift on untouched queries)
+    arm_order = list(arms.items())
+    sf = None  # the arms' own SPARK_GRAFT_SF_DIR, as their records say
+    for rep in range(reps):
+        for arm, path in arm_order if rep % 2 == 0 else arm_order[::-1]:
+            with tempfile.NamedTemporaryFile(
+                suffix=".json", delete=False
+            ) as tf:
+                tmp = tf.name
+            cmd = [
+                sys.executable,
+                os.path.join(path, "bench.py"),
+                "--only",
+                ",".join(parts),
+                "--out",
+                tmp,
+            ]
+            subprocess.run(
+                cmd, cwd=path, check=True,
+                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+            )
+            with open(tmp) as fh:
+                rec = json.load(fh)
+            os.unlink(tmp)
+            sf = rec["sf"]
+            for q in parts:
+                if q in rec["queries"]:
+                    runs_ref[arm][q].append(rec["queries"][q])
+            print(
+                f"[bench] ab-ref rep {rep + 1}/{reps} arm {arm}: "
+                + ", ".join(f"{q}={rec['queries'].get(q)}" for q in parts),
+                file=sys.stderr,
+            )
+    payload = {
+        "metric": "ab_ref_min",
+        "value": 0.0,
+        "unit": "sec",
+        "queries": {
+            f"{a}:{q}": round(min(r), 3) if r else None
+            for a, qs in runs_ref.items()
+            for q, r in qs.items()
+        },
+        "sf": sf,
+        "ab_ref": ref,
+        "ab_runs": runs_ref,
+    }
+    _write_out(payload, args.out)
+    print(json.dumps({"ab_ref": ref, "ab_runs": runs_ref}))
+    print(
+        json.dumps(
+            {
+                "metric": "ab_ref_min",
+                "arms": {
+                    a: round(sum(min(r) for r in qs.values() if r), 3)
+                    for a, qs in runs_ref.items()
+                },
+            }
+        )
+    )
+
+
+def run_sweep(args: argparse.Namespace) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from setu_spark.session import get_spark
 
@@ -883,19 +828,25 @@ def main() -> None:
     import __spark_entry__ as entry
 
     queries = entry.queries()
-    names = list(queries) if full else HEADLINE
-    if only_names:
-        unknown = [n for n in only_names if n not in queries]
+    names = list(queries) if args.full else HEADLINE
+    if args.only:
+        unknown = [n for n in args.only if n not in queries]
         if unknown:
             sys.exit(f"--only: unknown queries {unknown}")
-        names = only_names
+        names = args.only
+    canary_gate = args.canary_gate
+
+    def _run(name: str) -> float:
+        t0 = time.perf_counter()
+        queries[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        return time.perf_counter() - t0
 
     # Warm the JVM/codegen paths and the Python (Arrow UDF) workers once so
     # the first measured query doesn't pay session/worker spin-up.
     try:
-        queries["q01_pricing_summary"](spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        _run(CANARY_QUERY)
         spark.range(64).select(
             F.pandas_udf(lambda s: s, "long")(F.col("id"))
         ).write.format("noop").mode("overwrite").save()
@@ -905,64 +856,24 @@ def main() -> None:
         # one DISCARD canary: the first in-sweep canary otherwise reads
         # ~1.5x the session median (paths the generic warm-up above
         # does not touch) and systematically flags the first measured
-        # query in EVERY record — observed on all four clean round-11
-        # records, which left q01 with no clean composite sample
+        # query in EVERY record, leaving q01 with no clean composite
+        # sample
         try:
-            queries[CANARY_QUERY](spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            _run(CANARY_QUERY)
         except Exception as exc:
             print(f"[bench] canary warm-up failed: {exc!r}", file=sys.stderr)
 
     def _time_canary(tag: str) -> float | None:
         """One timed canary run — the pre/post sweep self-qualification
-        probes (round-11 VERDICT task 2). Warm by construction: the
-        generic warm-up above already ran the canary query once."""
+        probes. Warm by construction: the generic warm-up above already
+        ran the canary query once."""
         try:
-            t0 = time.perf_counter()
-            queries[CANARY_QUERY](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t = round(time.perf_counter() - t0, 3)
+            t = round(_run(CANARY_QUERY), 3)
             print(f"[bench] canary_{tag}: {t}s", file=sys.stderr)
             return t
         except Exception as exc:  # probe failure ≠ sweep failure
             print(f"[bench] canary_{tag} failed: {exc!r}", file=sys.stderr)
             return None
-
-    if ab_names:
-        # Interleaved A/B (PERF.md methodology, promoted to a flag per
-        # round-7 VERDICT task 7): alternate the two arms run-by-run so
-        # a co-tenant burst hits BOTH, making the per-arm min/median a
-        # trustworthy delta where sequential single artifacts are not.
-        qa, qb, reps = ab_names
-        runs_ab: dict[str, list[float]] = {qa: [], qb: []}
-        for _ in range(reps):
-            for name in (qa, qb):
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs_ab[name].append(
-                    round(time.perf_counter() - t0, 3)
-                )
-                spark.catalog.clearCache()
-        payload = {
-            "metric": "interleaved_ab_min",
-            "value": round(
-                min(runs_ab[qa]) + min(runs_ab[qb]), 3
-            ),
-            "unit": "sec",
-            "queries": {n: min(r) for n, r in runs_ab.items()},
-            "sf": sf_dir,
-            "ab_runs": runs_ab,
-        }
-        if out_path:
-            with open(out_path, "w") as fh:
-                json.dump(payload, fh, indent=1)
-        print(json.dumps({"ab_runs": runs_ab}))
-        print(dump_line(final_line(payload)))
-        return
 
     # min of 2 runs per query: the machine hosting the bench also hosts
     # other work, and single-shot numbers swing ±40% with background load;
@@ -973,9 +884,8 @@ def main() -> None:
     # times — a burst long enough to poison four spaced runs hasn't been
     # observed.
     SLOW_FLOOR = 5.0
-    # Failure isolation: one throwing query must not abort the sweep (a
-    # single bad query killed the entire round-3 bench before any JSON was
-    # written). Each query runs under try/except; errors are recorded in a
+    # Failure isolation: one throwing query must not abort the sweep.
+    # Each query runs under try/except; errors are recorded in a
     # parallel map and the partial result is checkpointed to
     # bench_partial.json after EVERY query so a hard crash mid-sweep still
     # leaves numbers on disk.
@@ -983,28 +893,22 @@ def main() -> None:
     errors: dict[str, str] = {}
     # queries where MORE than the baseline 2 samples ran (adaptive
     # third on >1.5× disagreement, or SLOW_FLOOR retries) — recorded so
-    # cross-round deltas stay interpretable: min over more samples is
+    # cross-record deltas stay interpretable: min over more samples is
     # biased low, and PERF.md methodology references this key
     extra_samples: dict[str, int] = {}
     # Host load around each query (1-min loadavg): this machine is
-    # co-tenant and single-shot numbers swing ±40% under bursts —
-    # BENCH_r04 read 1.10x vs r01 while the same-day idle run read
-    # 0.97x, and nothing in the JSON showed why. Recording load makes
-    # noisy runs machine-distinguishable from regressions.
+    # co-tenant and single-shot numbers swing ±40% under bursts.
+    # Recording load makes noisy runs machine-distinguishable from
+    # regressions.
     loads: dict[str, float] = {}
     load_start = os.getloadavg()[0]
-    # --loadavg-gate: per-query flag when the pre-run 1-min loadavg
-    # exceeds the threshold — the record self-qualifies and
-    # --composite prefers unflagged samples
-    load_flagged: list[str] = []
     # --canary-gate: one canary run immediately before each measured
     # query; flags computed against the record's own canary median at
     # every checkpoint (host-metric-free burst detection)
     canary_samples: dict[str, float] = {}
     # pre/post sweep probes: ALWAYS taken (gated or plain) so every
-    # record — most importantly the driver's plain BENCH_rN sweep — is
-    # self-qualifying from its final line alone (round-11 VERDICT
-    # task 2); ~2s total
+    # record — most importantly a plain ungated sweep — is
+    # self-qualifying from its final line alone; ~2s total
     canary_probes: dict[str, float] = {}
     t_pre = _time_canary("pre")
     if t_pre is not None:
@@ -1025,11 +929,11 @@ def main() -> None:
         }
         return block, flagged
 
-    def _checkpoint() -> None:
+    def _checkpoint() -> dict:
         payload = {
             "metric": (
                 "full_registry_total_wall"
-                if full
+                if args.full
                 else "headline_query_total_wall"
             ),
             "value": round(sum(timings.values()), 3),
@@ -1044,9 +948,6 @@ def main() -> None:
         }
         if extra_samples:
             payload["extra_samples"] = extra_samples
-        if loadavg_gate is not None:
-            payload["loadavg_gate"] = loadavg_gate
-            payload["load_flagged"] = load_flagged
         if canary_gate is not None:
             block, flagged = _canary_block()
             payload["canary"] = block
@@ -1064,47 +965,22 @@ def main() -> None:
     for name in names:
         if canary_gate is not None:
             try:
-                t0 = time.perf_counter()
-                queries[CANARY_QUERY](spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                canary_samples[name] = round(time.perf_counter() - t0, 3)
+                canary_samples[name] = round(_run(CANARY_QUERY), 3)
             except Exception as exc:  # canary failure ≠ sweep failure
                 print(f"[bench] canary failed: {exc!r}", file=sys.stderr)
         loads[name] = round(os.getloadavg()[0], 2)
-        if loadavg_gate is not None and loads[name] > loadavg_gate:
-            load_flagged.append(name)
-            print(
-                f"[bench] {name}: loadavg {loads[name]} > gate "
-                f"{loadavg_gate} — record flagged",
-                file=sys.stderr,
-            )
         try:
-            runs: list[float] = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
+            runs = [_run(name), _run(name)]
             # Adaptive third sample: two runs disagreeing by >1.5× means a
             # co-tenant burst hit one of them (a plan doesn't cost 1.5×
             # itself run-to-run); one more sample lets min() shed the
             # poisoned one. Bounded: at most +1 run, only on noisy queries.
             if max(runs) > 1.5 * min(runs):
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
+                runs.append(_run(name))
             retries = 0
             while min(runs) > SLOW_FLOOR and retries < 2:
                 retries += 1
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
+                runs.append(_run(name))
             timings[name] = round(min(runs), 3)
             if len(runs) > 2:
                 extra_samples[name] = len(runs)
@@ -1127,55 +1003,21 @@ def main() -> None:
     era_ref = latest_committed_era(os.path.dirname(os.path.abspath(__file__)))
     if era_ref:
         payload["era_ref"] = era_ref
-    if "--funnel-shared" in sys.argv:
-        import setu_spark.operators.dedup as dedup
-
-        FUNNEL_FAMILY = [
-            "q56_dedup_components",
-            "q125_dedup_impact_audit",
-            "q144_leak_free_split",
-            "q149_component_source_purity",
-            "q150_quality_survivor_delta",
-        ]
-        shared: dict[str, float] = {}
-        dedup.FUNNEL_SHARED = True
-        try:
-            t_all = time.perf_counter()
-            for name in FUNNEL_FAMILY:
-                # no clearCache between family members — sharing the
-                # cached funnel is the point of this pass. Same failure
-                # isolation as the main sweep: one throwing family member
-                # must not lose the whole run's --out dump and final line.
-                t0 = time.perf_counter()
-                try:
-                    queries[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    shared[name] = round(time.perf_counter() - t0, 3)
-                except Exception as exc:
-                    errors[f"funnel_shared:{name}"] = repr(exc)[:500]
-                    print(
-                        f"[bench] funnel-shared {name}: ERROR {exc!r}",
-                        file=sys.stderr,
-                    )
-            shared["_family_total"] = round(
-                time.perf_counter() - t_all, 3
-            )
-        finally:
-            dedup.FUNNEL_SHARED = False
-            dedup.clear_funnel_memo()
-            spark.catalog.clearCache()
-        payload["funnel_shared"] = shared
-        if errors:  # funnel errors land after the final checkpoint
-            payload["errors"] = errors
-        print(f"[bench] funnel-shared: {shared}", file=sys.stderr)
-    if out_path:
-        with open(out_path, "w") as fh:
-            json.dump(payload, fh, indent=1)
+    _write_out(payload, args.out)
     # Detail (loadavg, errors) on its OWN line; the compact headline
     # summary is the FINAL line so a tail-capture of any size parses.
     print(json.dumps(detail_line(payload)))
     print(dump_line(final_line(payload)))
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = parse_args(argv)
+    if args.composite:
+        run_composite(args)
+    elif args.ab_ref:
+        run_ab_ref(args)
+    else:
+        run_sweep(args)
 
 
 if __name__ == "__main__":

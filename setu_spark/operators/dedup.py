@@ -992,66 +992,7 @@ def connected_components(
     return labels
 
 
-#: Opt-in cross-query sharing of the collapse funnel (bench.py
-#: --funnel-shared): q56/q125/q144/q149/q150 all run the IDENTICAL
-#: exact_collapsed_components stage on the same documents scan, so a
-#: bench sweep of the family pays it five times (~14s of the round-6
-#: 60s headline). With the flag on, the first call caches the funnel
-#: result keyed by the input plan's semantic hash and the family
-#: reuses it — the regression signal per query stays (each query's own
-#: aggregate is still timed) without 5× redundant funnel wall. OFF by
-#: default: registered queries must stand alone for the oracle gate.
-FUNNEL_SHARED = False
-_FUNNEL_MEMO: dict[int, DataFrame] = {}
-
-
-def clear_funnel_memo() -> None:
-    for df in _FUNNEL_MEMO.values():
-        try:
-            df.unpersist(False)
-        except Exception:
-            pass
-    _FUNNEL_MEMO.clear()
-
-
-#: Pass-through columns the FUNNEL_SHARED cache materializes so every
-#: family member's ``carry`` request is a sub-select of ONE cached
-#: funnel (q125/q150 need n_chars, q149 needs source; q56/q144 none).
-_SHARED_CARRY = ("n_chars", "source")
-
-
 def exact_collapsed_components(
-    docs: DataFrame, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """See :func:`_collapsed_components` (the plan); this wrapper adds
-    the opt-in :data:`FUNNEL_SHARED` cross-query cache. ``carry``
-    columns of ``docs`` ride the funnel into the output (round-14
-    optimization — consumers previously re-scanned the corpus and
-    joined the funnel back on doc_id to re-attach them)."""
-    if FUNNEL_SHARED:
-        # materialize the carry SUPERSET once so q56/q125/q144/q149/
-        # q150 all hit the same memo entry regardless of their own
-        # carry subset (limited to columns docs actually has, so
-        # minimal test frames still share correctly)
-        shared = tuple(carry) + tuple(
-            c
-            for c in _SHARED_CARRY
-            if c in docs.columns and c not in carry
-        )
-        key = (docs.semanticHash(), shared)
-        if key not in _FUNNEL_MEMO:
-            _FUNNEL_MEMO[key] = _collapsed_components(
-                docs, carry=shared
-            ).cache()
-        if shared == tuple(carry):  # nothing to drop — hand back the
-            return _FUNNEL_MEMO[key]  # cached frame itself
-        return _FUNNEL_MEMO[key].select(
-            "doc_id", "component", "in_graph", *carry
-        )
-    return _collapsed_components(docs, carry=carry)
-
-
-def _collapsed_components(
     docs: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """(doc_id, component, in_graph[, *carry]) for EVERY document — the LSH/CC
@@ -1084,31 +1025,26 @@ def _collapsed_components(
     overhead buys no shrink (~+0.7s at sf0.1) — the right side of the
     trade.
 
-    Round-14 restructures (all row-identical by substitution; plan
-    evidence in plans/r14/):
+    Plan shape (each choice row-identical to the naive composition):
 
-    * ``carry`` pass-through columns — consumers that need per-doc
-      attributes (q125/q150 n_chars, q149 source) previously re-scanned
-      the corpus and joined the funnel back on doc_id: two more
-      exchanges + a join per query. The columns now ride the existing
-      k-shuffle (a few bytes each; Catalyst prunes them from plans
-      that don't select them).
-    * the ``rep_full`` intermediate is gone: doc2rep left-joins the CC
-      labels directly on rep_id. The old inner join through rep_full
-      was total (every doc2rep.rep_id exists in reps; rep_full is
-      exactly one row per rep), so
-      ``coalesce(component, rep_id)`` / ``component IS NOT NULL``
-      evaluate identically — and the plan loses a SECOND full
-      scan→groupBy(k) recompute of the rep set
-      (plans/r13/q56_*_after.txt nodes 15-23).
+    * ``carry`` columns of ``docs`` ride the funnel into the output, so
+      consumers that need per-doc attributes (q125/q150 n_chars, q149
+      source) do not re-scan the corpus and join back on doc_id. They
+      ride the existing k-shuffle (a few bytes each; Catalyst prunes
+      them from plans that don't select them).
+    * doc2rep left-joins the CC labels directly on rep_id. Every
+      doc2rep.rep_id exists in reps, so ``coalesce(component, rep_id)``
+      / ``component IS NOT NULL`` need no per-rep intermediate — and
+      the plan avoids a second full scan→groupBy(k) recompute of the
+      rep set.
     * the CC labels arrive broadcast-hinted from the local dispatch
       (see :func:`_local_components`) and the candidate pairs skip the
       redundant re-canonicalize+distinct (``pairs_canonical=True``)."""
     # Null-safe: for NULL text the size(...) >= N predicate evaluates to
     # NULL, and a bare filter(ok)/filter(~ok) split would drop the row
-    # from BOTH branches (round-6 ADVICE). NULL-text docs must land in
-    # short_full with their own singleton component, like the oracles
-    # (comp_full over ALL documents) and the pre-collapse left-join path.
+    # from BOTH branches. NULL-text docs must land in short_full with
+    # their own singleton component, like the oracles (comp_full over
+    # ALL documents) and the pre-collapse left-join path.
     shingleable = F.coalesce(
         F.size(
             F.filter(

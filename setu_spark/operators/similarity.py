@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import functools
 import operator
-import os
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -645,76 +644,23 @@ def _lloyd_centroids(src, k: int, iters: int):
     return cents
 
 
-#: Trained codebooks memoized by (input plan semantic hash, k, iters):
-#: an IVF index trains its codebook ONCE and persists it alongside the
-#: index — composed queries (q131 audits q63, q140 audits q138) and
-#: repeated invocations over the same corpus reuse the trajectory
-#: instead of re-running the Lloyd passes. Deterministic, so values
-#: are identical either way; entries are driver-sized (k × d float64)
-#: and bounded to the last few corpora.
-_CODEBOOK_MEMO: dict[tuple, "object"] = {}
-_CODEBOOK_MEMO_MAX = 8
-
-
-def clear_codebook_memo() -> None:
-    _CODEBOOK_MEMO.clear()
-
-
-def _corpus_fingerprint(emb: DataFrame) -> tuple:
-    """Data-aware component of the codebook memo key. The plan's
-    ``semanticHash`` alone is PLAN-based: it does not change when the
-    underlying parquet files are rewritten in place (e.g. a fixture
-    regenerated at the same path mid-session), so a hash-only key could
-    serve centroids trained on vanished data. Folding in the scan's file
-    list with per-file (size, mtime) for local files makes an in-place
-    rewrite a memo MISS; non-file schemes fall back to path identity
-    (object stores version by key, not in-place mutation)."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = sorted(emb.inputFiles())
-    except Exception:
-        return ("no-input-files",)
-    sig = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme in ("", "file"):
-            try:
-                st = os.stat(unquote(u.path))
-                sig.append((f, st.st_size, st.st_mtime_ns))
-            except OSError:
-                sig.append((f, -1, -1))
-        else:
-            sig.append((f, 0, 0))
-    return tuple(sig)
-
-
 def train_codebook(emb: DataFrame, k: int, iters: int = KM_ITERS):
     """Train an IVF codebook with q85's spherical k-means instead of
     taking the first-k embeddings verbatim: [k × d] float64 centroids,
-    cell id = row index (0-based).  On clustered corpora the trained
-    cells track the true clusters, which is what lifts q138's recall
-    and flattens q143's occupancy (pinned by tests/test_kmeans.py);
-    on structureless vectors it degrades gracefully to the pseudo-
-    codebook's behavior.  The training cost is ``iters`` narrow
-    passes over the corpus with O(batches × k) driver reduces — the
-    corpus projection is cached for the loop and released after; the
-    result is memoized per corpus plan (see :data:`_CODEBOOK_MEMO`)."""
-    key = (emb.semanticHash(), _corpus_fingerprint(emb), k, iters)
-    hit = _CODEBOOK_MEMO.get(key)
-    if hit is not None:
-        return hit
+    cell id = row index (0-based), or ``None`` on an empty corpus.  On
+    clustered corpora the trained cells track the true clusters, which
+    is what lifts q138's recall and flattens q143's occupancy (pinned by
+    tests/test_kmeans.py); on structureless vectors it degrades
+    gracefully to the pseudo-codebook's behavior.  The training cost is
+    ``iters`` narrow passes over the corpus with O(batches × k) driver
+    reduces — the corpus projection is cached for the loop and released
+    after.  Every call trains afresh, so a query's result and timing
+    never depend on what ran earlier in the session."""
     src = emb.select("vec_id", "embedding").cache()
     try:
-        cents = _lloyd_centroids(src, k, iters)
+        return _lloyd_centroids(src, k, iters)
     finally:
         src.unpersist(False)
-    if cents is None:  # empty corpus — no codebook; callers branch
-        return None
-    while len(_CODEBOOK_MEMO) >= _CODEBOOK_MEMO_MAX:
-        _CODEBOOK_MEMO.pop(next(iter(_CODEBOOK_MEMO)))
-    _CODEBOOK_MEMO[key] = cents
-    return cents
 
 
 def _kmeans_cte(k: "int | str" = KM_K, iters: int = KM_ITERS) -> str:
@@ -1080,9 +1026,7 @@ def _semantic_dedup_raw(
     emb: DataFrame, k: int, iters: int, tau: float
 ) -> DataFrame:
     """The literal (oracle-shaped) pairwise stage: within-cluster
-    self-join over every vector.
-
-    """
+    self-join over every vector."""
     labeled = kmeans_clusters(emb, k, iters).select("vec_id", "cluster")
     vecs = emb.select("vec_id", "embedding").join(labeled, "vec_id")
     a, b = vecs.alias("a"), vecs.alias("b")

