@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from setu_spark.functions.hashes import hash64, hash64_sql
-from setu_spark.caching import scoped_cache
+from setu_spark.operators.skew import PREFIX_PARTS, global_running_sums
 from setu_spark.registry import register
 from setu_spark.sources.io import load_table, load_table_parallel
 
@@ -51,9 +51,6 @@ EVAL_HEX = "0"
 
 #: q29 word budget at test scale.
 WORD_BUDGET = 10_000
-#: q29 range partitions for the distributed prefix sum (at 100 TB this
-#: is O(cluster cores); the per-partition totals stay one row each).
-PREFIX_PARTS = 16
 
 TFIDF_TOPK = 3
 
@@ -244,16 +241,11 @@ def q29_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     word count fits {WORD_BUDGET}. The "give me a fair 50 B-token sample
     of this 10 T-token corpus" operator.
 
-    Scale shape — a DISTRIBUTED PREFIX SUM, not a single global window:
-    a global ``ORDER BY`` window (the oracle's form) funnels 100 TB
-    through ONE task. Instead: range-partition on the sample key, run
-    the running sum per partition (parallel, partition-local window),
-    then lift per-partition totals — {PREFIX_PARTS} rows of metadata, an
-    AQE-statistics-sized driver collect — into per-partition offsets
-    rejoined by broadcast. Identical result, and every stage is
-    partition-parallel with one range shuffle. The projection is cached
-    so the totals pass and the output pass share one materialization
-    (also pinning one range-boundary sampling for both)."""
+    Scale shape: a global ``ORDER BY`` window (the oracle's form)
+    funnels the corpus through ONE task, so the running sum is
+    :func:`~setu_spark.operators.skew.global_running_sums` — one range
+    shuffle on the sample key, partition-local windows, and a
+    ≤{PREFIX_PARTS}-row offsets collect rejoined by broadcast."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
@@ -262,35 +254,12 @@ def q29_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "skey"
         ),
     )
-    local = (
-        d.repartitionByRange(PREFIX_PARTS, "skey")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "local_cum",
-            F.sum("words_count").over(
-                Window.partitionBy("pid")
-                .orderBy("skey")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
+    ranked, _ = global_running_sums(
+        d, ["skey"], {"cum_words": F.col("words_count")},
+        "q29_token_budget_sample",
     )
-    local = scoped_cache("q29_token_budget_sample", local)
-    # Tiny metadata collect (≤ PREFIX_PARTS rows): per-partition totals →
-    # exclusive prefix offsets. Range partitions are key-ordered, so
-    # ascending pid IS ascending key range.
-    totals = sorted(
-        local.groupBy("pid").agg(F.max("local_cum").alias("tot")).collect()
-    )
-    offsets, running = [], 0
-    for row in totals:
-        offsets.append((row["pid"], running))
-        running += row["tot"]
-    off = spark.createDataFrame(offsets or [(0, 0)], "pid int, off long")
-    return (
-        local.join(F.broadcast(off), "pid")
-        .withColumn("cum_words", F.col("local_cum") + F.col("off"))
-        .filter(F.col("cum_words") <= WORD_BUDGET)
-        .select("doc_id", "words_count", "cum_words")
+    return ranked.filter(F.col("cum_words") <= WORD_BUDGET).select(
+        "doc_id", "words_count", "cum_words"
     )
 
 
@@ -1297,46 +1266,23 @@ _Q88_SQL_CTES = """
 def q102_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket the corpus into {N_TIERS} quality tiers by the q88
     perplexity proxy ("train on the top 3 deciles" is a standard
-    curation policy) — tier = exact global rank decile over the ROUND-6
-    score with doc_id tie-break, so both engines draw identical
-    boundaries.
+    curation policy) — tier = exact global rank decile over the
+    6-digit-rounded score with doc_id tie-break, so both engines draw
+    identical boundaries.
 
-    Scale shape — the q29 distributed-rank pattern generalized: a global
-    ntile/row_number window funnels 100 TB through ONE task, so instead
-    the scored docs are RANGE-partitioned on (score, doc_id), ranked
-    partition-locally (parallel), and lifted to global ranks by a
-    {PREFIX_PARTS}-row offsets collect + broadcast join. Any range
-    boundary sampling yields the same final ranks (offsets correct for
-    whatever boundaries were drawn). The scoring sub-plan is q88's
-    (one token shuffle + word-partition window)."""
+    Scale shape: a global ntile/row_number window funnels the corpus
+    through ONE task, so the rank is a running count from
+    :func:`~setu_spark.operators.skew.global_running_sums` (range
+    partitions on (score, doc_id), partition-local windows, a
+    ≤{PREFIX_PARTS}-row offsets collect), which also returns the corpus
+    size. The scoring sub-plan is q88's (one token shuffle +
+    word-partition window)."""
     scored = q88_unigram_logprob(spark, sf_dir)
-    local = (
-        scored.repartitionByRange(
-            PREFIX_PARTS, "avg_neg_logprob", "doc_id"
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "local_rn",
-            F.row_number().over(
-                Window.partitionBy("pid").orderBy(
-                    "avg_neg_logprob", "doc_id"
-                )
-            ),
-        )
+    ranked, totals = global_running_sums(
+        scored, ["avg_neg_logprob", "doc_id"], {"rn": F.lit(1)},
+        "q102_quality_tiers",
     )
-    local = scoped_cache("q102_quality_tiers", local)
-    totals = sorted(
-        local.groupBy("pid").agg(F.max("local_rn").alias("tot")).collect()
-    )
-    offsets, running = [], 0
-    for row in totals:
-        offsets.append((row["pid"], running))
-        running += row["tot"]
-    n_total = running
-    off = spark.createDataFrame(offsets or [(0, 0)], "pid int, off long")
-    ranked = local.join(F.broadcast(off), "pid").withColumn(
-        "rn", F.col("local_rn") + F.col("off")
-    )
+    n_total = totals["rn"]
     tier = (
         F.floor(
             (F.col("rn") - 1) * N_TIERS / F.lit(float(n_total))

@@ -737,12 +737,11 @@ def simhash_column(
 
 # ------------------------------------------------------- survivor selection
 
-#: Edge count at or below which connected_components finishes the graph
-#: driver-locally (union-find over a bounded collect) instead of paying
-#: the iterative loop's per-round job overhead. The count is of
-#: NORMALIZED undirected edges (pairs are canonicalized least/greatest
-#: before distinct, so (a,b) and (b,a) count once regardless of the
-#: candidate generator's orientation). 500k collected Row objects plus
+#: Pair-row count at or below which connected_components finishes the
+#: graph driver-locally (union-find over a bounded collect) instead of
+#: paying the iterative loop's per-round job overhead. The count is of
+#: RAW input rows (mirrored and repeated edges count each time), so the
+#: collect never exceeds it. 500k collected Row objects plus
 #: the union-find dicts is a few hundred MB of driver heap — real but
 #: bounded, and well under both driver.maxResultSize and the 128 GiB
 #: driver this targets — while the iterative path costs ~1s of
@@ -763,15 +762,14 @@ def _local_components(und_edges, spark, dtype: str) -> DataFrame:
     labels, one collect + one createDataFrame — no iterative jobs.
     ``und_edges`` is a collected list of (u, v) rows.
 
-    The returned frame carries an explicit ``broadcast`` hint (round-14
-    optimization, guide §3.1): a ``createDataFrame`` relation has no
-    stats (``Scan ExistingRDD``, default sizeInBytes = huge), so the
-    planner joined these few-hundred-row labels back to the rep set via
-    SortMergeJoin with TWO exchanges (plans/r13/q56_*_after.txt nodes
-    22/27). The relation is driver-bounded by construction — this path
-    only runs at ≤ ``LOCAL_CC_MAX_EDGES`` normalized edges, so at most
-    2·bound nodes ≈ 16 MB of (long, long) rows at the 500k cap — well
-    inside executor broadcast budgets."""
+    The returned frame carries an explicit ``broadcast`` hint: a
+    ``createDataFrame`` relation has no stats (``Scan ExistingRDD``,
+    default sizeInBytes = huge), so without it the planner joins these
+    few-hundred-row labels back to the rep set via SortMergeJoin with
+    TWO exchanges. The relation is driver-bounded by construction —
+    this path only runs at ≤ ``LOCAL_CC_MAX_EDGES`` pair rows, so at
+    most 2·bound nodes ≈ 16 MB of (long, long) rows at the 500k cap —
+    well inside executor broadcast budgets."""
     parent: dict = {}
 
     def find(x):
@@ -804,111 +802,65 @@ def _local_components(und_edges, spark, dtype: str) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iterations: int = 20,
     local_edge_bound: int = LOCAL_CC_MAX_EDGES,
-    pairs_canonical: bool = False,
-    pairs_unique: bool = True,
 ) -> DataFrame:
-    """Connected components over near-duplicate pairs by iterative
-    min-label propagation: every doc starts as its own component; each
-    round, a doc adopts the smallest component id among itself and its
-    neighbors; fixpoint when an iteration changes nothing. Returns
-    (doc_id, component) — dedup keeps one survivor per component (the
-    min id, which is exactly the component label).
+    """Connected components over near-duplicate ``(id_a, id_b)`` pairs
+    by iterative min-label propagation: every doc starts as its own
+    component; each round, a doc adopts the smallest component id among
+    itself and its neighbors; fixpoint when an iteration changes
+    nothing. Returns (doc_id, component) — dedup keeps one survivor per
+    component (the min id, which is exactly the component label).
 
-    Scale shape: each round is the 1-hop min-propagation (edge join +
-    min-agg) plus a POINTER-JUMP (labels re-labeled through themselves,
-    one self-join) — the jump composes reachability so the label's
-    reach roughly DOUBLES per round: rounds go O(diameter) → O(log
-    diameter) — measured 5 → 3 rounds (24.7s → 18.8s) on the 1M-edge
-    200k-chain fixture, and 14 rounds on a single diameter-9999 chain
-    the 1-hop loop could never finish inside any sane iteration cap.
-    The jump preserves the invariant "label(n) is the id of some node
-    in n's component, ≤ n" (label(n) is in the component; its label is
-    too, and is no larger), and convergence is still detected on the
-    1-hop step alone: at a 1-hop fixpoint labels are constant per
-    component (any edge with unequal labels would change one side), so
-    the jump is also a no-op there. ``localCheckpoint`` cuts lineage
-    each round (iterative DataFrame plans otherwise grow
-    exponentially). Small graphs (≤ ``local_edge_bound`` normalized
-    undirected edges — counted on the CACHED edge set, one parallel
-    job) skip the loop entirely and finish with a driver-local
-    union-find: label-identical by construction, and it replaces ~4
-    scheduler-bound jobs per round with one count + one cache-read
-    collect (2.8s → 0.1s on the 366-edge sf0.1 graph vs the loop).
-    Round-13: the dispatch uses ``cache()+count()`` instead of the
-    previous ``localCheckpoint()+count()`` — one materialization job
-    fewer and no checkpoint write; a ``take(bound+1)`` probe was tried
-    first and REJECTED by A/B (bench_records/ab_r13opt_wave1.json:
-    q149 1.22×, q150 1.30× — executeTake's incremental partition
-    scale-up turns one parallel job into 3-4 sequential ones). Set
-    ``local_edge_bound=0`` to force the distributed path (tests pin
-    the two paths label-equal).
+    Input contract: ``pairs`` may be in either orientation, repeat
+    edges (e.g. the raw banded pairs of ``lsh_candidate_pairs(distinct=
+    False)``, one row per shared band) and hold self-loops. Duplicate
+    edges change nothing algebraically (the min-label loop aggregates
+    by min; union-find unions idempotently), so no pair-dedup shuffle
+    runs up front: the pairs are projected to ``(least, greatest)`` —
+    no exchange, and the identity on canonical pairs — and cached.
 
-    ``pairs_canonical=True`` (round-14 optimization, guide §2.4
-    "remove shuffles outright"): a caller that GUARANTEES its pairs
-    are already distinct with ``id_a < id_b`` — which
-    :func:`lsh_candidate_pairs` produces by construction (the join
-    predicate orders the ids and ``.distinct()`` runs on the pair) —
-    skips the canonicalize+distinct here. The least/greatest is then
-    the identity and the distinct a no-op, but Spark cannot prove
-    either, so the default path paid one full extra Exchange +
-    dedup aggregate per call right after the generator's own distinct
-    exchange. Label output is identical by construction; pinned by
-    tests/test_dedup.py::test_cc_pairs_canonical_matches_default.
+    Dispatch: ``count()`` on the CACHED relation computes + stores every
+    partition in one parallel job. At ≤ ``local_edge_bound`` RAW rows
+    (conservative: raw ≥ distinct, so the collect stays ≤ bound rows)
+    the graph finishes with a driver-local union-find — label-identical
+    by construction, and one cache-read collect instead of ~4
+    scheduler-bound jobs per round (2.8s → 0.1s on the 366-edge sf0.1
+    graph). A ``take(bound+1)`` probe is no cheaper: executeTake scans
+    partitions in sequential scale-up rounds (q149 1.22×, q150 1.30×
+    measured). Otherwise the distributed path dedups off the cache
+    before the loop, so rounds never shuffle duplicate edges. Set
+    ``local_edge_bound=0`` to force the distributed path (tests pin the
+    two paths label-equal).
 
-    ``pairs_unique=False`` (round-14, canonical inputs only): the
-    caller's pairs may contain DUPLICATE ROWS — e.g. the raw banded
-    pairs of ``lsh_candidate_pairs(distinct=False)``, one row per
-    shared band. Duplicate edges change nothing algebraically (the
-    min-label loop aggregates by min; union-find unions idempotently),
-    so the generator's pair-dedup exchange — a whole shuffle stage on
-    this eager dispatch path — can be skipped. The local-path bound
-    then gates on the RAW row count (conservative: raw ≥ distinct, so
-    a duplicate-banded graph near the bound dispatches distributed a
-    little earlier; the collect stays ≤ bound rows either way), and
-    the DISTRIBUTED path dedups off the cached relation before the
-    loop so CC iterations never shuffle duplicate edges at scale.
-    Pinned label-equal by tests/test_dedup.py::
-    test_cc_duplicate_edges_match_unique."""
-    # canonicalize orientation BEFORE distinct so the local-path bound
-    # counts true undirected edges even if the candidate generator
-    # emits both (a,b) and (b,a) (round-7 ADVICE: the directed count
-    # would otherwise halve the effective bound)
-    a, b = F.col(id_a), F.col(id_b)
-    if pairs_canonical:
-        und = pairs.select(a.alias("u"), b.alias("v")).cache()
-    else:
-        # non-canonical callers always get the dedup: least/greatest
-        # can manufacture duplicates from (a,b)/(b,a) mirror rows, and
-        # the bound must count true undirected edges
-        pairs_unique = True
-        und = (
-            pairs.select(
-                F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-            )
-            .distinct()
-            .cache()
-        )
-    # count() on the CACHED relation computes + stores every partition
-    # in ONE parallel job; the local path's collect() then reads the
-    # cache, and the distributed path's `edges` derivation reuses the
-    # same in-memory relation — the candidate generator upstream runs
-    # exactly once either way, with no checkpoint write. (A
-    # take(bound+1) single-action probe was A/B-rejected: executeTake
-    # scans partitions in sequential scale-up rounds.)
+    Distributed scale shape: each round is the 1-hop min-propagation
+    (edge join + min-agg) plus a POINTER-JUMP (labels re-labeled through
+    themselves, one self-join) — the jump composes reachability so the
+    label's reach roughly DOUBLES per round: rounds go O(diameter) →
+    O(log diameter) — measured 5 → 3 rounds (24.7s → 18.8s) on the
+    1M-edge 200k-chain fixture, and 14 rounds on a single
+    diameter-9999 chain the 1-hop loop could never finish inside any
+    sane iteration cap. The jump preserves the invariant "label(n) is
+    the id of some node in n's component, ≤ n" (label(n) is in the
+    component; its label is too, and is no larger), and convergence is
+    still detected on the 1-hop step alone: at a 1-hop fixpoint labels
+    are constant per component (any edge with unequal labels would
+    change one side), so the jump is also a no-op there.
+    ``localCheckpoint`` cuts lineage each round (iterative DataFrame
+    plans otherwise grow exponentially)."""
+    a, b = F.col("id_a"), F.col("id_b")
+    und = pairs.select(
+        F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
+    ).cache()
     if und.count() <= local_edge_bound:
         dtype = und.schema["u"].dataType.simpleString()
         rows = und.collect()
         und.unpersist(False)
         return _local_components(rows, pairs.sparkSession, dtype)
-    # und is canonicalized (u ≤ v) and — after the dedup below when the
-    # caller passed duplicate-banded rows — distinct, so the flipped
-    # copy is disjoint from it except for self-loops: no second
-    # distinct shuffle needed to symmetrize
-    ded = und if pairs_unique else und.distinct()
+    # ded is canonical (u ≤ v) and distinct, so the flipped copy is
+    # disjoint from it except for self-loops: no second distinct
+    # shuffle needed to symmetrize
+    ded = und.distinct()
     edges = (
         ded.union(
             ded.filter(F.col("u") != F.col("v")).select(
@@ -978,11 +930,11 @@ def connected_components(
             break
     else:
         # Exiting by exhaustion means non-converged labels — which would
-        # silently mismatch the exact transitive-closure oracle (round-4
-        # ADVICE). A duplicate chain longer than max_iterations hops is
-        # a sign the candidate graph is pathological (e.g. LSH banding
-        # misconfigured into one giant component); fail loudly instead
-        # of returning partial components.
+        # silently mismatch the exact transitive-closure oracle. A
+        # duplicate chain longer than max_iterations hops is a sign the
+        # candidate graph is pathological (e.g. LSH banding misconfigured
+        # into one giant component); fail loudly instead of returning
+        # partial components.
         raise RuntimeError(
             f"connected_components did not converge within "
             f"{max_iterations} iterations — labels still changing; "
@@ -1038,8 +990,8 @@ def exact_collapsed_components(
       the plan avoids a second full scan→groupBy(k) recompute of the
       rep set.
     * the CC labels arrive broadcast-hinted from the local dispatch
-      (see :func:`_local_components`) and the candidate pairs skip the
-      redundant re-canonicalize+distinct (``pairs_canonical=True``)."""
+      (see :func:`_local_components`), and the raw banded candidate
+      pairs go into CC with no pair-dedup exchange."""
     # Null-safe: for NULL text the size(...) >= N predicate evaluates to
     # NULL, and a bare filter(ok)/filter(~ok) split would drop the row
     # from BOTH branches. NULL-text docs must land in short_full with
@@ -1087,9 +1039,7 @@ def exact_collapsed_components(
     # raw banded pairs: CC tolerates duplicate edges, so the pair-dedup
     # exchange (a whole stage on this eager dispatch path) is skipped
     pairs = lsh_candidate_pairs(sig, distinct=False)
-    comps = connected_components(
-        pairs, pairs_canonical=True, pairs_unique=False
-    )
+    comps = connected_components(pairs)
     long_full = doc2rep.join(
         comps.withColumnRenamed("doc_id", "rep_id"), "rep_id", "left"
     ).select(

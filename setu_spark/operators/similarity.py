@@ -16,6 +16,7 @@ the bucket — the ANN analog of the LSH band join in dedup.
 from __future__ import annotations
 
 import functools
+import math
 import operator
 
 import pandas as pd
@@ -644,20 +645,40 @@ def _lloyd_centroids(src, k: int, iters: int):
     return cents
 
 
-def train_codebook(emb: DataFrame, k: int, iters: int = KM_ITERS):
+def ivf_cells(n: int) -> int:
+    """IVF codebook size for ``n`` vectors: ⌈√n⌉ cells — the standard
+    IVF sizing rule (FAISS guideline: #lists ~ sqrt(n)), and the choice
+    that makes margin mining's candidate volume sub-quadratic by
+    construction: per-cell population ~ sqrt(n), so candidates ~
+    |X|*probes*|Y_cell| ~ n^1.5 instead of n^2. A FIXED cell count
+    would only shave a constant factor (probes/cells) off the cross
+    product — measured: a q138 cut on the 8-cell q63 codebook was still
+    grinding at 20x where this form finishes in seconds.
+    ``_MINE_CELLS_SQL`` is the oracle twin."""
+    return math.ceil(math.sqrt(n))
+
+
+def train_codebook(
+    emb: DataFrame, k: int | None = None, iters: int = KM_ITERS
+):
     """Train an IVF codebook with q85's spherical k-means instead of
     taking the first-k embeddings verbatim: [k × d] float64 centroids,
-    cell id = row index (0-based), or ``None`` on an empty corpus.  On
-    clustered corpora the trained cells track the true clusters, which
-    is what lifts q138's recall and flattens q143's occupancy (pinned by
-    tests/test_kmeans.py); on structureless vectors it degrades
-    gracefully to the pseudo-codebook's behavior.  The training cost is
-    ``iters`` narrow passes over the corpus with O(batches × k) driver
-    reduces — the corpus projection is cached for the loop and released
-    after.  Every call trains afresh, so a query's result and timing
-    never depend on what ran earlier in the session."""
+    cell id = row index (0-based), or ``None`` on an empty corpus.
+    ``k=None`` sizes the codebook to :func:`ivf_cells` of the corpus
+    size, counted on the cached projection (so the count also fills the
+    cache the loop reads). On clustered corpora the trained cells track
+    the true clusters, which is what lifts q138's recall and flattens
+    q143's occupancy (pinned by tests/test_kmeans.py); on structureless
+    vectors it degrades gracefully to the pseudo-codebook's behavior.
+    The training cost is ``iters`` narrow passes over the corpus with
+    O(batches × k) driver reduces — the corpus projection is cached for
+    the loop and released after. Every call trains afresh, so a query's
+    result and timing never depend on what ran earlier in the
+    session."""
     src = emb.select("vec_id", "embedding").cache()
     try:
+        if k is None:
+            k = ivf_cells(src.count())
         return _lloyd_centroids(src, k, iters)
     finally:
         src.unpersist(False)
@@ -1522,14 +1543,8 @@ def q131_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: side is assigned to exactly one cell).
 MINE_PROBE = 2
 
-#: IVF codebook size for margin mining: ceil(sqrt(n)) cells — the
-#: standard IVF sizing rule (FAISS guideline: #lists ~ sqrt(n)), and
-#: the choice that makes the candidate volume sub-quadratic by
-#: construction: per-cell population ~ sqrt(n), so candidates ~
-#: |X|*probes*|Y_cell| ~ n^1.5 instead of n^2. A FIXED cell count
-#: would only shave a constant factor (probes/cells) off the cross
-#: product — measured: the first q138 cut used the 8-cell q63 codebook
-#: and was still grinding at 20x where this form finishes in seconds.
+#: IVF codebook size for margin mining — the DuckDB twin of
+#: :func:`ivf_cells`.
 _MINE_CELLS_SQL = (
     # count(embedding) skips NULL-embedding rows — load_vectors parity
     "(SELECT CAST(ceil(sqrt(count(embedding))) AS BIGINT) FROM embeddings)"
@@ -1596,8 +1611,9 @@ _Q138_ORACLE = f"""
 def margin_pairs_ann(emb: DataFrame, codebook=None) -> DataFrame:
     """ANN-bounded margin pair mining — q126's contract with candidate
     generation routed through IVF cells instead of the exact |X|*|Y|
-    kernel. The codebook is the embeddings of vec_id 1..ceil(sqrt(n))
-    (standing in for a k-means codebook, FAISS-style sqrt(n) sizing);
+    kernel. The codebook is :func:`train_codebook` at its ⌈√n⌉ default
+    (``codebook`` overrides it for A/B tests: tests/test_kmeans.py pins
+    trained ≥ first-k pseudo-codebook recall on a clustered fixture);
     each X vector probes its {MINE_PROBE} nearest cells, each Y vector
     is assigned its single nearest cell, candidates are the (x, y)
     pairs meeting in a probed cell, and the margin score + mutual-best
@@ -1633,25 +1649,13 @@ def margin_pairs_ann(emb: DataFrame, codebook=None) -> DataFrame:
     pinned stance). Exposed as a DataFrame-taking helper so the
     planted-fixture recall test can drive it on clustered synthetic
     shapes next to :func:`margin_pairs_exact` (tests/test_kmeans.py)."""
-    import math
-
     import numpy as np
 
-    n = emb.count()
-    if n == 0:  # empty corpus: no cells, no candidates (oracle: empty)
+    cmat = codebook if codebook is not None else train_codebook(emb)
+    if cmat is None:  # empty corpus: no cells, no candidates (oracle: empty)
         return emb.sparkSession.createDataFrame(
             [], "x_id bigint, y_id bigint, cosine_sim double, margin double"
         )
-    n_cells = int(math.ceil(math.sqrt(float(n))))
-    # TRAINED codebook (q85's Lloyd trajectory at sqrt(n) cells, round-6
-    # VERDICT task 4): on clustered corpora the cells track the true
-    # clusters — higher q140 recall, flatter q143 occupancy — instead of
-    # whatever the first sqrt(n) vectors happened to be.  ``codebook``
-    # overrides for A/B tests (tests/test_kmeans.py pins trained ≥
-    # pseudo on the clustered fixture).
-    cmat = codebook if codebook is not None else train_codebook(
-        emb, n_cells
-    )
     cells = np.arange(len(cmat), dtype=np.int64)
     cnorm = np.sqrt((cmat * cmat).sum(axis=1))
     k = MINE_K
@@ -1873,8 +1877,6 @@ def q140_margin_ann_recall_audit(
     aggregate. At production scale the exact side runs on a SAMPLE of
     the incoming batch (ground truth is quadratic by definition) —
     same stance as q131."""
-    import math
-
     emb_n = load_vectors(spark, sf_dir).count()
     if emb_n == 0:
         # empty corpus: zero exact pairs, zero found — recall is 0/0,
@@ -1885,8 +1887,7 @@ def q140_margin_ann_recall_audit(
             "n_exact bigint, n_found bigint, recall double,"
             " recall_ok boolean",
         )
-    n_cells = int(math.ceil(math.sqrt(float(emb_n))))
-    bound = (0.5 * MINE_PROBE * MINE_PROBE) / n_cells
+    bound = (0.5 * MINE_PROBE * MINE_PROBE) / ivf_cells(emb_n)
     exact = q126_margin_pair_mining(spark, sf_dir).select("x_id", "y_id")
     ann = q138_margin_pair_mining_ann(spark, sf_dir).select(
         "x_id", "y_id"
@@ -1898,9 +1899,8 @@ def q140_margin_ann_recall_audit(
     # try_divide: a NON-empty corpus can still have ZERO exact mutual
     # pairs (single-vector corpus; Y slice with no mutual best) — 0/0
     # is NULL in DuckDB and a DIVIDE_BY_ZERO raise under Spark ANSI, so
-    # recall and recall_ok go NULL in both engines (found by the
-    # round-13 single-row probe; the emb_n guard above only covers the
-    # fully-empty corpus)
+    # recall and recall_ok go NULL in both engines (the emb_n guard
+    # above only covers the fully-empty corpus)
     rec = F.try_divide(F.col("n_found"), F.col("n_exact").cast("double"))
     return tot.crossJoin(hit).select(
         F.col("n_exact").cast("long"),
@@ -2037,9 +2037,9 @@ def q143_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one narrow Arrow pass (n × C BLAS assignment, the
     q138 assigner with topn=1, no embedding carried in the output) →
     one map-combined groupBy(cell) over C≈sqrt(n) groups → broadcast
-    one-row totals. Nothing pair-sized anywhere."""
-    import math
-
+    one-row totals. Nothing pair-sized anywhere. The corpus size n is a
+    driver-side count because share and load_factor divide by it as a
+    literal; the codebook is sized from it with :func:`ivf_cells`."""
     import numpy as np
 
     emb = load_vectors(spark, sf_dir)
@@ -2049,7 +2049,7 @@ def q143_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "cell bigint, n_vecs bigint, share double,"
             " load_factor double"
         )
-    n_cells = int(math.ceil(math.sqrt(float(n))))
+    n_cells = ivf_cells(n)
     # the SAME trained codebook q138 mines through — the audit must
     # measure the index that production uses, not a stand-in
     cmat = train_codebook(emb, n_cells)

@@ -12,6 +12,9 @@ at runtime. These helpers cover the residual cases AQE can't fix:
     key). Works for any algebraic aggregate.
   * **skewed join against a replicable right side** — explode the small
     side by the salt domain so each salted left row finds its match.
+  * **global ordered window** — a running sum / row number ``OVER (ORDER
+    BY ...)`` with no partition key runs in ONE task whatever AQE does;
+    :func:`global_running_sums` computes it range-partitioned instead.
 
 Both are opt-in per hot key-set, not blanket: salting costs an extra
 shuffle and defeats partial aggregation when the data is NOT skewed.
@@ -23,6 +26,15 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from setu_spark.caching import scoped_cache
+
+#: Range partitions of :func:`global_running_sums` (and q94's packing
+#: groups). The offsets collect is bounded at this many rows; at cluster
+#: scale it is sized like shuffle parallelism (hundreds) and stays
+#: metadata-sized either way.
+PREFIX_PARTS = 16
 
 
 def with_salt(df: DataFrame, buckets: int, col_name: str = "_salt") -> DataFrame:
@@ -86,3 +98,59 @@ def salted_join(
     )
     out = big_s.join(small_s, [*on, "_salt"], how)
     return out.drop("_salt")
+
+
+def global_running_sums(
+    df: DataFrame,
+    order: Sequence,
+    sums: dict[str, Column],
+    cache_key: str,
+) -> tuple[DataFrame, dict[str, int]]:
+    """Global running sums over ``df`` in ``order`` without a global
+    window: ``sums`` maps each output column to the integer value it
+    accumulates (a row number is the running sum of ``F.lit(1)``), with
+    ``order`` a total order (ties broken) so the sums are deterministic.
+
+    Range-partition on ``order``, run each sum as a partition-local
+    window, collect the per-partition totals (at most
+    :data:`PREFIX_PARTS` rows) into exclusive offsets and rejoin them by
+    broadcast. Every stage is partition-parallel, and any range
+    boundaries give the same result because the offsets correct for
+    whatever boundaries were drawn. The local stage is cached under
+    ``cache_key`` (:func:`scoped_cache`) so the totals pass and the
+    output pass share one materialization and one boundary sample.
+
+    Returns the frame (``df``'s columns plus one global running column
+    per ``sums`` key) and the grand total of each sum as a Python int."""
+    w = (
+        Window.partitionBy("pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    local = scoped_cache(
+        cache_key,
+        df.repartitionByRange(PREFIX_PARTS, *order)
+        .withColumn("pid", F.spark_partition_id())
+        .select(
+            "*",
+            *[F.sum(v).over(w).alias(f"_run_{n}") for n, v in sums.items()],
+        ),
+    )
+    parts = local.groupBy("pid").agg(
+        *[F.sum(v).alias(n) for n, v in sums.items()]
+    )
+    # range partitions are key-ordered: ascending pid is ascending order
+    offsets, running = [], dict.fromkeys(sums, 0)
+    for row in sorted(parts.collect(), key=lambda r: r["pid"]):
+        offsets.append((row["pid"], *running.values()))
+        for n in sums:
+            running[n] += row[n] or 0
+    off = df.sparkSession.createDataFrame(
+        offsets or [(0, *running.values())],
+        "pid int, " + ", ".join(f"_off_{n} long" for n in sums),
+    )
+    out = local.join(F.broadcast(off), "pid").select(
+        *df.columns,
+        *[(F.col(f"_run_{n}") + F.col(f"_off_{n}")).alias(n) for n in sums],
+    )
+    return out, running

@@ -13,7 +13,6 @@ purely per-row ops).
 
 from __future__ import annotations
 
-import functools
 import math
 
 import pandas as pd
@@ -34,6 +33,7 @@ from pyspark.sql.types import (
 from setu_spark.functions.hashes import hash64, hash64_sql
 from setu_spark.functions.tokenize import trivial_tokenize_sql
 from setu_spark.caching import scoped_cache
+from setu_spark.operators.skew import global_running_sums
 from setu_spark.registry import register
 from setu_spark.sources.io import load_table, load_table_parallel
 
@@ -1353,11 +1353,6 @@ def q130_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- q132
-#: Range-partition count for the vocabulary prefix sum (the q29
-#: pattern): the offsets collect is bounded at this many rows. At
-#: cluster scale this is sized like shuffle parallelism (hundreds) —
-#: the collect stays AQE-statistics-sized either way.
-_COVERAGE_PARTS = 16
 @register(
     "q132_vocab_coverage",
     oracle="""
@@ -1392,18 +1387,12 @@ def q132_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary would pay; with q130's merge mining this is the pair of
     queries a tokenizer build runs over the corpus.
 
-    Scale shape — a DISTRIBUTED PREFIX SUM over the vocabulary (the
-    q29 pattern, round-9 fix: the earlier unpartitioned
-    rank+running-sum window funneled the full vocabulary — 1e7-1e8+
-    rows at web scale — through ONE task; an unpartitioned window is
-    not a cluster sort, it is one partition): range-partition the
-    word-count aggregate on (c desc, word), run rank and running sum
-    per partition (parallel, partition-local window), lift the
-    ≤{_COVERAGE_PARTS}-row per-partition totals into exclusive offsets
-    by one AQE-statistics-sized driver collect, and rejoin them by
-    broadcast. The same collect yields the corpus token total and
-    vocabulary size as scalars, so the corpus aggregate is touched in
-    one cached pass."""
+    Scale shape: the word-count aggregate (map-combined) feeds
+    :func:`~setu_spark.operators.skew.global_running_sums` on (c desc,
+    word) — an unpartitioned rank+running-sum window would funnel the
+    full vocabulary (1e7-1e8+ rows at web scale) through ONE task. The
+    same offsets collect yields the vocabulary size and the corpus
+    token total as scalars."""
     docs = load_table(spark, sf_dir, "documents")
     wc = (
         docs.select(F.explode(F.split("text", " ", -1)).alias("word"))
@@ -1411,61 +1400,17 @@ def q132_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("c"))
     )
-    local = (
-        wc.repartitionByRange(_COVERAGE_PARTS, F.desc("c"), F.asc("word"))
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn(
-            "local_rnk",
-            F.row_number().over(
-                Window.partitionBy("pid").orderBy(
-                    F.desc("c"), F.asc("word")
-                )
-            ),
-        )
-        .withColumn(
-            "local_cum",
-            F.sum("c").over(
-                Window.partitionBy("pid")
-                .orderBy(F.desc("c"), F.asc("word"))
-                .rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
+    ranked, totals = global_running_sums(
+        wc, [F.desc("c"), F.asc("word")], {"rnk": F.lit(1), "cum": F.col("c")},
+        "q132_vocab_coverage",
     )
-    local = scoped_cache("q132_vocab_coverage", local)
-    # Tiny metadata collect (≤ _COVERAGE_PARTS rows): per-partition
-    # (row count, token total) → exclusive rank/cum offsets. Range
-    # partitions are key-ordered, so ascending pid IS descending count.
-    totals = sorted(
-        local.groupBy("pid")
-        .agg(
-            F.max("local_rnk").alias("n"),
-            F.max("local_cum").alias("tot"),
-        )
-        .collect()
-    )
-    offsets, rnk_run, cum_run = [], 0, 0
-    for row in totals:
-        offsets.append((row["pid"], rnk_run, cum_run))
-        rnk_run += row["n"]
-        cum_run += row["tot"]
-    vocab, tot = rnk_run, cum_run
-    off = spark.createDataFrame(
-        offsets or [(0, 0, 0)], "pid int, rnk_off long, cum_off long"
-    )
-    return (
-        local.join(F.broadcast(off), "pid")
-        .withColumn("rnk", F.col("local_rnk") + F.col("rnk_off"))
-        .filter(
-            (F.expr("rnk & (rnk - 1)") == 0) | (F.col("rnk") == F.lit(vocab))
-        )
-        .select(
-            F.col("rnk").cast("long").alias("vocab_size"),
-            F.round(
-                (F.col("local_cum") + F.col("cum_off"))
-                / F.lit(float(tot)),
-                6,
-            ).alias("coverage"),
-        )
+    return ranked.filter(
+        (F.expr("rnk & (rnk - 1)") == 0) | (F.col("rnk") == totals["rnk"])
+    ).select(
+        F.col("rnk").alias("vocab_size"),
+        F.round(F.col("cum") / F.lit(float(totals["cum"])), 6).alias(
+            "coverage"
+        ),
     )
 
 
@@ -1527,7 +1472,10 @@ def _bpe_chain(iters: int) -> str:
     (probed: 'aaaaa' + (a,a) → [aa, aa, a]). Built programmatically so
     the iteration count is the single BPE_ITERS constant shared with
     the Spark loop; q139 (merge table) and q141 (compression curve)
-    SELECT from the same chain, so the two oracles cannot drift."""
+    SELECT from the same chain, so the two oracles cannot drift. Once
+    no adjacent pair is left b_k is empty and the LEFT JOIN carries
+    seg_{k-1} through unchanged (NULL never matches a symbol), so the
+    curve stays flat, as in the Spark loop."""
     parts = [
         """
     WITH wf AS (
@@ -1569,7 +1517,7 @@ def _bpe_chain(iters: int) -> str:
                         b{k}.s1 || b{k}.s2)
                  ELSE list_concat(acc, x) END
              ) AS syms
-      FROM {prev} CROSS JOIN b{k})"""
+      FROM {prev} LEFT JOIN b{k} ON true)"""
         )
     return ",".join(parts)
 
@@ -1606,6 +1554,81 @@ def _bpe_merge_expr(a: str, b: str):
     )
 
 
+def _bpe_loop(spark: SparkSession, sf_dir: str, rounds: int):
+    """The Spark side of the BPE merge loop, shared by q139 and q141:
+    ``rounds`` aggregates over the word-frequency table's segmentation,
+    adopting each round's top pair and merging after every round except
+    the last. Returns ``(occurrences, [(total_tokens, top), ...])`` —
+    Σfreq, and per round the token count of that round's segmentation
+    and the pair it adopts, ``(s1, s2, count)`` or None when no adjacent
+    pair is left. Once no pair is left the segmentation cannot change,
+    so later rounds repeat the total without running. On an empty
+    corpus every value is None.
+
+    Each round is ONE driver action over ONE pair aggregate: every word
+    contributes its adjacent pairs plus a (NULL, NULL) marker row, both
+    weighted by freq, so in the global aggregate on top ``sum(c)`` is
+    Σ freq·|syms| (|syms|−1 pairs + 1 marker per word), the marker group
+    is Σfreq, and ``min(struct(-c, s1, s2))`` over the real pairs is
+    ``ORDER BY c DESC, s1, s2 LIMIT 1`` — the oracle's tie-break, so
+    both engines adopt the same pair. All sums are exact longs.
+
+    Scale shape: the corpus is read once into the word-frequency table;
+    the pair explode and the merge fold (a codegen'd JVM HOF, no Python)
+    run over the vocabulary (Heaps-law sublinear in corpus size), so
+    per-round cost is flat in corpus size (PERF.md q139 sweep). Each
+    segmentation is cached so round k never replays merges 1..k-1 from
+    the scan."""
+    docs = load_table(spark, sf_dir, "documents")
+    seg = (
+        docs.select(F.explode(F.split("text", " ", -1)).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count("*").cast("long").alias("freq"))
+        .select("freq", F.split("word", "").alias("syms"))
+        .cache()
+    )
+    cached = [seg]
+    occurrences, out = None, []
+    # per word: a (NULL, NULL) marker entry, then its adjacent pairs
+    pairs = F.expr(
+        "transform(sequence(0, size(syms) - 1), i -> struct("
+        "  IF(i = 0, NULL, element_at(syms, i)) AS s1,"
+        "  IF(i = 0, NULL, element_at(syms, i + 1)) AS s2))"
+    )
+    real = F.col("s1").isNotNull()
+    try:
+        while len(out) < rounds:
+            (row,) = (
+                seg.select("freq", F.explode(pairs).alias("p"))
+                .select("freq", "p.s1", "p.s2")
+                .groupBy("s1", "s2")
+                .agg(F.sum("freq").alias("c"))
+                .agg(
+                    F.sum("c").alias("total"),
+                    F.sum(F.when(~real, F.col("c"))).alias("occ"),
+                    F.min(
+                        F.when(real, F.struct(-F.col("c"), "s1", "s2"))
+                    ).alias("top"),
+                )
+                .collect()
+            )
+            occurrences, best = row["occ"], row["top"]
+            top = best and (best[1], best[2], -best[0])
+            out.append((row["total"], top))
+            if top is None:
+                out += [(row["total"], None)] * (rounds - len(out))
+            elif len(out) < rounds:
+                seg = seg.select(
+                    "freq", _bpe_merge_expr(top[0], top[1]).alias("syms")
+                ).cache()
+                cached.append(seg)
+    finally:
+        for df in cached:
+            df.unpersist()
+    return occurrences, out
+
+
 @register("q139_bpe_merge_iterations", oracle=_bpe_oracle(BPE_ITERS))
 def q139_bpe_merge_iterations(
     spark: SparkSession, sf_dir: str
@@ -1618,65 +1641,14 @@ def q139_bpe_merge_iterations(
     both engines adopt the same pair), re-segment every word with the
     greedy left-to-right merge, and repeat. Output is the adopted merge
     table — (iteration, left, right, count) — which IS a BPE
-    tokenizer's artifact.
+    tokenizer's artifact; it stops early once no adjacent pair is left
+    (empty on an empty corpus).
 
-    Scale shape: every iteration is the same vocabulary-bounded shape
-    as q130 — the pair explode and the merge fold run over the
-    word-frequency table (Heaps-law sublinear in corpus size), never
-    the corpus; the corpus is read ONCE to build ``wf``. Per iteration
-    the driver collects exactly one row (the winning pair — the same
-    bounded-collect contract as q63's codebook), and the merge is a
-    codegen'd JVM fold, so per-iteration cost is flat in corpus size
-    (PERF.md q139 sweep). Intermediate segmentations are cached so
-    iteration k never replays merges 1..k-1 from the scan."""
-    docs = load_table(spark, sf_dir, "documents")
-    wf = (
-        docs.select(F.explode(F.split("text", " ", -1)).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("freq"))
-    )
-    seg = wf.select("freq", F.split("word", "").alias("syms")).cache()
-    cached = [seg]
-    merges: list[tuple[int, str, str, int]] = []
-    try:
-        for it in range(1, BPE_ITERS + 1):
-            pairs = (
-                seg.filter(F.size("syms") >= 2)
-                .select(
-                    "freq",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(1, size(syms) - 1),"
-                            " i -> struct("
-                            "   element_at(syms, i) AS s1,"
-                            "   element_at(syms, i + 1) AS s2))"
-                        )
-                    ).alias("p"),
-                )
-                .select("freq", "p.s1", "p.s2")
-            )
-            top = (
-                pairs.groupBy("s1", "s2")
-                .agg(F.sum("freq").cast("long").alias("pair_count"))
-                .orderBy(F.desc("pair_count"), "s1", "s2")
-                .limit(1)
-                .collect()
-            )
-            if not top:  # vocabulary fully merged — nothing adjacent
-                break
-            a, b, cnt = top[0].s1, top[0].s2, int(top[0].pair_count)
-            merges.append((it, a, b, cnt))
-            if it < BPE_ITERS:
-                seg = seg.select(
-                    "freq", _bpe_merge_expr(a, b).alias("syms")
-                ).cache()
-                cached.append(seg)
-    finally:
-        for df in cached:
-            df.unpersist()
+    Scale shape: :func:`_bpe_loop` — one vocabulary-bounded aggregate
+    and one one-row collect per iteration."""
+    _, rounds = _bpe_loop(spark, sf_dir, BPE_ITERS)
     return spark.createDataFrame(
-        merges,
+        [(it, *top) for it, (_, top) in enumerate(rounds, 1) if top],
         "iteration bigint, left_sym string, right_sym string,"
         " pair_count bigint",
     )
@@ -1710,115 +1682,21 @@ def q141_bpe_compression_curve(
     through {BPE_ITERS}. This is the curve a tokenizer build watches
     to pick its merge budget ("how much does each merge actually buy
     on THIS corpus"); paired with q132's vocabulary-coverage curve it
-    is the full tokenizer-design readout.
+    is the full tokenizer-design readout. The curve is flat once no
+    adjacent pair is left, and one all-NULL row per iteration on an
+    empty corpus (SQL sums over nothing), as in the oracle.
 
-    Scale shape: identical to q139 — the corpus is read once into the
-    word-frequency table; every per-iteration total is a single
-    vocabulary-bounded aggregate, the winning pair and the totals are
-    the only driver collects, and the merge is the same codegen'd JVM
-    fold. The tokens_per_occurrence ratio divides two exact BIGINTs in
+    Scale shape: :func:`_bpe_loop` run one round further than q139 —
+    each round's token total rides the same aggregate that picks the
+    pair. The tokens_per_occurrence ratio divides two exact BIGINTs in
     IEEE double in both engines and rounds half-up at 6 digits
-    (textstats._round6 discipline).
-
-    Round-14: ONE driver action per iteration instead of two (plus a
-    separate up-front Σfreq) — the loop was 10 sequential jobs at 4
-    merges, pure scheduler latency on a vocabulary-sized table. The
-    identity Σ freq·|syms| = Σ_pairs freq + Σ freq (every word
-    contributes |syms|−1 adjacent pairs; single-symbol words
-    contribute none) lets the per-iteration token total ride the SAME
-    pair aggregate that picks the winning merge: one collect returns
-    the top pair, the pair-occurrence total, and (first iteration
-    only) Σfreq — exact long arithmetic throughout, value-identical
-    to the old two-action form and to the oracle's sum(freq·len)."""
-    docs = load_table(spark, sf_dir, "documents")
-    wf = (
-        docs.select(F.explode(F.split("text", " ", -1)).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("freq"))
-    )
-    seg = wf.select("freq", F.split("word", "").alias("syms")).cache()
-    cached = [seg]
-    rows: list[tuple[int, int, float]] = []
-    nil = F.lit(None).cast("string")
-    try:
-        tot_occ: int | None = None
-        for it in range(0, BPE_ITERS + 1):
-            agg = (
-                seg.filter(F.size("syms") >= 2)
-                .select(
-                    "freq",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(1, size(syms) - 1),"
-                            " i -> struct("
-                            "   element_at(syms, i) AS s1,"
-                            "   element_at(syms, i + 1) AS s2))"
-                        )
-                    ).alias("p"),
-                )
-                .select("freq", "p.s1", "p.s2")
-                .groupBy("s1", "s2")
-                .agg(F.sum("freq").cast("long").alias("c"))
-            )
-            parts = [
-                agg.agg(F.sum("c").cast("long").alias("c")).select(
-                    F.lit("ptot").alias("k"), nil.alias("s1"),
-                    nil.alias("s2"), "c",
-                )
-            ]
-            if it < BPE_ITERS:
-                parts.append(
-                    agg.orderBy(F.desc("c"), "s1", "s2")
-                    .limit(1)
-                    .select(F.lit("top").alias("k"), "s1", "s2", "c")
-                )
-            if tot_occ is None:
-                parts.append(
-                    seg.agg(
-                        F.sum("freq").cast("long").alias("c")
-                    ).select(
-                        F.lit("ftot").alias("k"), nil.alias("s1"),
-                        nil.alias("s2"), "c",
-                    )
-                )
-            got = {
-                r["k"]: r
-                for r in functools.reduce(
-                    lambda x, y: x.unionByName(y), parts
-                ).collect()
-            }
-            if tot_occ is None:
-                ft = got["ftot"]["c"]
-                if ft is None:
-                    # empty corpus: SQL sum over nothing is NULL, so
-                    # the curve is one all-NULL row per iteration in
-                    # BOTH engines (the oracle's per-iteration CTEs
-                    # emit exactly that) — not an int(None) crash
-                    return spark.createDataFrame(
-                        [
-                            (k, None, None)
-                            for k in range(0, BPE_ITERS + 1)
-                        ],
-                        "iteration bigint, total_tokens bigint,"
-                        " tokens_per_occurrence double",
-                    )
-                tot_occ = int(ft)
-            total = int(got["ptot"]["c"] or 0) + tot_occ
-            rows.append((it, total, _round6(total / tot_occ)))
-            top = got.get("top")
-            if it == BPE_ITERS or top is None:
-                break
-            seg = seg.select(
-                "freq",
-                _bpe_merge_expr(top["s1"], top["s2"]).alias("syms"),
-            ).cache()
-            cached.append(seg)
-    finally:
-        for df in cached:
-            df.unpersist()
+    (textstats._round6 discipline)."""
+    occurrences, rounds = _bpe_loop(spark, sf_dir, BPE_ITERS + 1)
     return spark.createDataFrame(
-        rows,
+        [
+            (it, total, total and _round6(total / occurrences))
+            for it, (total, _) in enumerate(rounds)
+        ],
         "iteration bigint, total_tokens bigint,"
         " tokens_per_occurrence double",
     )

@@ -224,75 +224,57 @@ def test_connected_components_planted_clusters(spark):
     assert got_dist == expected
 
 
-def test_cc_pairs_canonical_matches_default(spark):
-    """``pairs_canonical=True`` (round-14: skips the re-canonicalize +
-    distinct exchange for generators that already emit distinct
-    ``id_a < id_b`` pairs, like lsh_candidate_pairs) must label
-    identically to the default path on the same canonical pair set —
-    on the union-find dispatch AND the forced-distributed loop."""
+def _cc_labels_both_paths(spark, rows):
+    """connected_components labels of ``rows`` on the union-find
+    dispatch and on the forced-distributed loop (which dedups off the
+    cache first)."""
     from setu_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        # already canonical: distinct rows, id_a < id_b everywhere
-        [(1, 2), (2, 3), (3, 4), (4, 5),
-         (10, 11), (10, 12), (11, 12),
-         (20, 21)],
-        ["id_a", "id_b"],
-    )
-    want = {
-        r.doc_id: r.component
-        for r in connected_components(pairs).collect()
-    }
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(
-            pairs, pairs_canonical=True
-        ).collect()
-    }
-    got_dist = {
-        r.doc_id: r.component
-        for r in connected_components(
-            pairs, pairs_canonical=True, local_edge_bound=0
-        ).collect()
-    }
-    assert got == want
-    assert got_dist == want
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    return [
+        {
+            r.doc_id: r.component
+            for r in connected_components(
+                pairs, local_edge_bound=bound
+            ).collect()
+        }
+        for bound in (len(rows), 0)
+    ]
+
+
+def test_cc_pairs_canonical_matches_default(spark):
+    """connected_components takes pairs in either orientation and with
+    self-loops: a canonical pair set (distinct rows, id_a < id_b, as
+    lsh_candidate_pairs emits) must label identically to the same graph
+    given mirrored and with self-loops, on both execution paths."""
+    canonical = [(1, 2), (2, 3), (3, 4), (4, 5),
+                 (10, 11), (10, 12), (11, 12),
+                 (20, 21), (30, 30)]
+    mixed = [(2, 1), (2, 3), (4, 3), (4, 5),
+             (11, 10), (10, 12), (12, 11),
+             (21, 20), (3, 3), (30, 30)]
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
+            10: 10, 11: 10, 12: 10,
+            20: 20, 21: 20, 30: 30}
+    for rows in (canonical, mixed):
+        for got in _cc_labels_both_paths(spark, rows):
+            assert got == want, rows
 
 
 def test_cc_duplicate_edges_match_unique(spark):
-    """``pairs_unique=False`` (round-14: the funnel feeds CC the RAW
-    banded pairs — one row per shared band — skipping the generator's
-    pair-dedup exchange): duplicate edges must label identically to
-    the distinct edge set, on the union-find dispatch AND the
-    forced-distributed loop (which dedups before iterating)."""
-    from setu_spark.operators.dedup import connected_components
-
+    """The funnel feeds connected_components the RAW banded pairs — one
+    row per shared band — so repeated edges (also mirrored repeats)
+    must label identically to the distinct edge set, on both execution
+    paths."""
     uniq = [(1, 2), (2, 3), (10, 11), (20, 21)]
-    dup = uniq + [(1, 2), (1, 2), (10, 11)]  # banded repeats
-    want = {
-        r.doc_id: r.component
-        for r in connected_components(
-            spark.createDataFrame(uniq, ["id_a", "id_b"])
-        ).collect()
-    }
-    dup_df = spark.createDataFrame(dup, ["id_a", "id_b"])
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(
-            dup_df, pairs_canonical=True, pairs_unique=False
-        ).collect()
-    }
-    got_dist = {
-        r.doc_id: r.component
-        for r in connected_components(
-            dup_df,
-            pairs_canonical=True,
-            pairs_unique=False,
-            local_edge_bound=0,
-        ).collect()
-    }
-    assert got == want
-    assert got_dist == want
+    dup = uniq + [
+        (1, 2), (1, 2), (10, 11),  # banded repeats
+        (3, 2), (21, 20), (21, 20),  # mirrored repeats
+    ]
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    for rows in (uniq, dup):
+        for got in _cc_labels_both_paths(spark, rows):
+            assert got == want, rows
 
 
 def test_connected_components_empty_graph(spark):
@@ -427,8 +409,8 @@ def test_connected_components_pointer_jump_depth(spark):
     """Pointer jumping makes rounds O(log diameter): a 128-hop chain
     must converge well inside 10 rounds (the plain 1-hop loop needs
     128), and still label every node with the chain's min id. Also
-    pins that mirrored-duplicate pair input ((a,b) AND (b,a)) is
-    normalized before the local-path edge count and changes nothing."""
+    pins that mirrored-duplicate pair input ((a,b) AND (b,a)) changes
+    nothing on the distributed loop."""
     import setu_spark.operators.dedup as dd
 
     chain = spark.createDataFrame(
@@ -441,8 +423,7 @@ def test_connected_components_pointer_jump_depth(spark):
     assert len(labels) == 129
     assert 0 < dd.LAST_CC_ROUNDS <= 10
 
-    # mirrored orientation: same labels, and the canonicalized edge
-    # count keeps the graph eligible for whichever path the bound picks
+    # mirrored orientation: same labels
     both = chain.union(
         chain.select(
             chain.id_b.alias("id_a"), chain.id_a.alias("id_b")

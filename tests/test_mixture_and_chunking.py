@@ -11,8 +11,10 @@ import hashlib
 import math
 import os
 
+import duckdb
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from setu_spark.functions.hashes import HEX_DIGITS
 from setu_spark.operators.curation import (
     CHUNK_LEN,
@@ -26,6 +28,13 @@ from setu_spark.operators.quality import (
     CQ_UMOD,
     q127_classifier_quality_filter,
 )
+from setu_spark.operators.textstats import (
+    BPE_ITERS,
+    q139_bpe_merge_iterations,
+    q141_bpe_compression_curve,
+)
+from tests.conftest import SF_SMALL
+from tests.oracle_utils import compare_frames
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -190,3 +199,83 @@ def test_q133_precision_one_on_exact_duplicates(spark, tmp_path):
     r = q133_lsh_precision_audit(spark, d).collect()[0]
     assert r["n_candidates"] == 1 and r["n_verified"] == 1
     assert r["precision_at_t"] == 1.0 and r["est_mae"] == 0.0
+
+
+# BPE merge loop (q139 merge table, q141 compression curve): the
+# (count DESC, left, right) tie-break both engines share, the
+# no-pair-left edge, and the loop's Spark job count.
+def _documents_oracle(d, name):
+    con = duckdb.connect()
+    # Spark writes documents.parquet as a directory of part files
+    path = os.path.join(d, "documents.parquet", "*.parquet")
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
+    )
+    try:
+        return con.execute(entrymod.oracle_sql()[name]).df()
+    finally:
+        con.close()
+
+
+def _assert_bpe_matches_oracle(spark, d, name):
+    got = entrymod.queries()[name](spark, d).toPandas()
+    assert compare_frames(got, _documents_oracle(d, name)) == [], name
+
+
+def test_bpe_tie_break_prefers_smaller_pair(spark, tmp_path):
+    # round 1: (x,y) and (x,z) tie at 3 -> the smaller right symbol
+    # wins; round 2: (x,z) at 3 beats every count-1 pair; rounds 3-4:
+    # all count 1 -> the smaller left symbol first, (a,z) before (b,c)
+    # although c < z. The long word keeps pairs alive past BPE_ITERS,
+    # so no round runs out of pairs.
+    d = _write_docs(
+        spark, tmp_path, [(1, "xz xy xz xy xy xz bc az qrstuvw", "en", "s")]
+    )
+    want = [
+        (1, "x", "y", 3),
+        (2, "x", "z", 3),
+        (3, "a", "z", 1),
+        (4, "b", "c", 1),
+    ][:BPE_ITERS]
+    got = sorted(
+        tuple(r) for r in q139_bpe_merge_iterations(spark, d).collect()
+    )
+    assert got == want
+    _assert_bpe_matches_oracle(spark, d, "q139_bpe_merge_iterations")
+    _assert_bpe_matches_oracle(spark, d, "q141_bpe_compression_curve")
+
+
+def test_bpe_single_character_vocabulary(spark, tmp_path):
+    # no word has two symbols: nothing to merge, so q139 adopts no pair
+    # and q141's curve stays at the character count for every round
+    d = _write_docs(spark, tmp_path, [(1, "a b c a b a", "en", "s")])
+    assert q139_bpe_merge_iterations(spark, d).count() == 0
+    curve = sorted(
+        tuple(r) for r in q141_bpe_compression_curve(spark, d).collect()
+    )
+    assert curve == [(it, 6, 1.0) for it in range(BPE_ITERS + 1)]
+    _assert_bpe_matches_oracle(spark, d, "q139_bpe_merge_iterations")
+    _assert_bpe_matches_oracle(spark, d, "q141_bpe_compression_curve")
+
+
+#: Ceiling on the Spark jobs one BPE round may run while q141 is built:
+#: one pair aggregate under one global aggregate is a scan stage plus
+#: two shuffle stages (AQE runs each as its own job), with headroom for
+#: the first round's word-frequency shuffle.
+JOBS_PER_ROUND = 5
+
+
+def test_q141_construct_job_count(spark):
+    """q141 builds its result by running the merge loop on the driver;
+    a second aggregate or collect per round shows up here as jobs."""
+    sc = spark.sparkContext
+    group = "q141-construct-jobs"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, "construct")
+    try:
+        q141_bpe_compression_curve(spark, SF_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= JOBS_PER_ROUND * (BPE_ITERS + 1), jobs

@@ -114,28 +114,36 @@ def test_aqe_off_invariance(name, spark):
     assert on.equals(off), f"{name}: result changed when AQE disabled"
 
 
-def test_q132_coverage_invariant_to_range_partition_count(spark):
-    """The prefix sum's OTHER layout knob: the number of range
-    partitions (_COVERAGE_PARTS) decides where the vocabulary splits
-    and how many offset rows the driver lifts — the curve must be
-    bit-identical at 1 (degenerate: everything in one partition), a
-    hostile 3, and 64 (more partitions than some ranges have rows)."""
-    import setu_spark.operators.textstats as ts
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q29_token_budget_sample",
+        "q102_quality_tiers",
+        "q132_vocab_coverage",
+    ],
+)
+def test_running_sum_invariant_to_range_partition_count(name, spark):
+    """The distributed running sum's OTHER layout knob: the number of
+    range partitions (skew.PREFIX_PARTS) decides where the order splits
+    and how many offset rows the driver lifts — every user of
+    global_running_sums must be bit-identical at 1 (degenerate:
+    everything in one partition), a hostile 3, and 64 (more partitions
+    than some ranges have rows)."""
+    import setu_spark.operators.skew as skew
 
     qs = entrymod.queries()
-    prev = ts._COVERAGE_PARTS
+    prev = skew.PREFIX_PARTS
     try:
         results = []
         for parts in (1, 3, 64):
-            ts._COVERAGE_PARTS = parts
+            skew.PREFIX_PARTS = parts
             spark.catalog.clearCache()
             results.append(
-                canonicalize(
-                    qs["q132_vocab_coverage"](spark, SF_ORACLE).toPandas()
-                )
+                canonicalize(qs[name](spark, SF_ORACLE).toPandas())
             )
     finally:
-        ts._COVERAGE_PARTS = prev
+        skew.PREFIX_PARTS = prev
         spark.catalog.clearCache()
+    assert len(results[0]), f"{name}: empty result proves nothing"
     assert results[0].equals(results[1]), "parts=1 vs parts=3 differ"
     assert results[0].equals(results[2]), "parts=1 vs parts=64 differ"
