@@ -6,7 +6,7 @@ margin miners' candidate stage, k-means' corpus projection). A bare
 ``.cache()`` is correct but never unpersisted — the blocks stay pinned
 in executor storage until the session ends, so a long-lived session
 composing queries (outside bench.py's per-query ``clearCache``) leaks
-storage memory across calls (round-6 ADVICE).
+storage memory across calls.
 
 ``scoped_cache(key, df)`` keeps AT MOST ONE live cached stage per key:
 re-entering the same operator evicts its previous call's cache first.

@@ -110,7 +110,7 @@ def cosine_pairs_udf():
     # output (cosine >= threshold) — Catalyst's filter pushdown then
     # DUPLICATES the Arrow UDF across the pushed filter (one
     # ArrowEvalPython below, one above: 2× the matmul, the q42/q48
-    # class). Found round 10 by the cache-aware duplicate-UDF gate in
+    # class), which the cache-aware duplicate-UDF gate catches in
     # q55/q123/q151; values are unchanged, only the duplication is
     # disabled.
     return _cos.asNondeterministic()
@@ -482,7 +482,7 @@ def q55_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cosine_sim") >= ND_THRESHOLD)
         .distinct()
     )
-    # pair-listing budget (round-10 VERDICT task 4): the estimate reads
+    # pair-listing budget: the estimate reads
     # only the (band, bucket) keys off the same cached projection
     from setu_spark.operators.guards import pair_budget_gate
 
@@ -521,7 +521,7 @@ def kmeans_clusters(
     the final labeled pass. Iterative fixpoint → rows-only driver check
     (same contract carve-out as q56's connected components); planted-
     cluster recovery is pinned in tests/test_kmeans.py."""
-    # scoped cache (round-6 ADVICE class): the projection feeds every
+    # scoped cache: the projection feeds every
     # Lloyd pass + the label pass, but a bare .cache() would leak
     # executor storage across repeated calls — evict the previous
     # kmeans call's cache on re-entry
@@ -575,7 +575,7 @@ def _cos_to(cents_snap):
 def _lloyd_centroids(src, k: int, iters: int):
     """The Lloyd loop of :func:`kmeans_clusters`, factored out so the
     IVF tiers can train their codebooks on the SAME oracle-replayable
-    trajectory (round-6 VERDICT task 4): init = embeddings of the k
+    trajectory: init = embeddings of the k
     lowest vec_ids, per-iteration assignment by round-6 cosine argmax,
     update = member mean rounded to 6 digits, empty clusters keeping
     the previous centroid.  Returns the final [k × d] float64 centroid
@@ -695,7 +695,7 @@ def _kmeans_cte(k: "int | str" = KM_K, iters: int = KM_ITERS) -> str:
     centroid trajectory exactly. The assignment argmax orders by ROUND-6
     cosines on both sides — numpy's matmul and these per-dimension sums
     accumulate in different orders, so raw doubles can differ by ulps and
-    flip a near-tie assignment (round-4 ADVICE).
+    flip a near-tie assignment.
 
     Returns the CTE block (no WITH keyword, no final SELECT) ending in
     ``assign(vec_id, label, cluster, cosv)`` — shared by the q85 oracle
@@ -834,7 +834,7 @@ _Q63_ORACLE = f"""
 def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse-quantize every vector to its nearest of
     {N_CENTROIDS} TRAINED centroids (q85's spherical k-means trajectory
-    via :func:`train_codebook` — round-6 VERDICT task 4; cell id =
+    via :func:`train_codebook`; cell id =
     0-based cluster index), then answer the vec_id=0 query by probing
     only the {N_PROBE} nearest cells — the inverted-file scale path
     where query cost is O(corpus/cells × nprobe) instead of O(corpus).
@@ -1187,8 +1187,8 @@ MINE_K = 4
 #: the stand-in for the smaller corpus of a bitext-mining run (the side
 #: a production job can afford to broadcast; the big side streams).
 MINE_MOD, MINE_REM = 10, 1
-#: Hard ceiling on the exact twin's Y-side driver collect (round-9
-#: VERDICT task 3): unlike every other bounded collect in the tree
+#: Hard ceiling on the exact twin's Y-side driver collect: unlike
+#: every other bounded collect in the tree
 #: (k / partitions / eval-set sized), q126's Y slice scales WITH the
 #: corpus, so past this bound the exact twin must fail loudly and point
 #: at q138's ANN form instead of silently OOMing the driver. 200k
@@ -1200,8 +1200,8 @@ MINE_Y_BOUND = 200_000
 #: candidate stage (mapInPandas / cogroup BLAS) feeds three plan
 #: branches (cand, ax, ay) and MUST be cached or it recomputes per
 #: branch — but a bare .cache() is never unpersisted, so repeated
-#: calls outside bench.py's per-query clearCache() leaked executor
-#: storage across invocations (round-6 ADVICE). Each call evicts the
+#: calls outside bench.py's per-query clearCache() leak executor
+#: storage across invocations. Each call evicts the
 #: SAME function's previous cache; different functions keep theirs so
 #: composed plans (q140 runs exact + ann together) stay cached until
 #: materialized.

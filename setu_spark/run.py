@@ -127,7 +127,7 @@ def stage_dedup(spark, inp: str, out: str, cfg: dict) -> str:
         write_parquet(lsh_candidate_pairs(sig), dst)
     finally:
         # both sinks are materialized by now — release the stage cache
-        # (the CLI chains stages in one session; round-6 ADVICE class)
+        # (the CLI chains stages in one session)
         sig.unpersist(False)
     return dst
 

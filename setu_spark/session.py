@@ -54,7 +54,7 @@ def cluster_conf(
 ) -> dict[str, str]:
     """The deploy-mode conf profile the README's 100 TB story implies —
     what changes when this engine leaves local[32] for a 1000-executor
-    YARN/K8s cluster (round-10 VERDICT task 7). Compose it over the
+    YARN/K8s cluster. Compose it over the
     factory defaults::
 
         spark = get_spark("setu-prod", master=None,
@@ -155,9 +155,10 @@ def get_spark(
     spark-submit the Python app attaches to an already-running gateway
     (``PYSPARK_GATEWAY_PORT`` in the environment) whose conf carries
     ``--master``, and calling ``.master()`` here would silently override
-    the cluster manager the operator asked for — the round-11 ADVICE
-    defect where the documented 1000-executor deploy recipe
-    (``get_spark(master=None, extra_conf=cluster_conf())``) ran local.
+    the cluster manager the operator asked for, and the documented
+    1000-executor deploy recipe
+    (``get_spark(master=None, extra_conf=cluster_conf())``) would run
+    local.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER")

@@ -206,8 +206,8 @@ def write_compacted(
 def rebalance_small_scan(
     df: DataFrame, input_bytes: int | None = None
 ) -> DataFrame:
-    """Input-parallelism floor for CPU-heavy per-row stages (round-13
-    optimization; guide §2.5 input skew / §6 input split size).
+    """Input-parallelism floor for CPU-heavy per-row stages (input skew
+    from too few input splits).
 
     Parquet scans cannot split below a row group: a file written as ONE
     row group yields exactly one non-empty scan task no matter what
@@ -265,9 +265,9 @@ _BYTE_SUFFIX = {
 
 def _session_split_bytes(spark: SparkSession) -> int:
     """The session's ACTUAL ``spark.sql.files.maxPartitionBytes``
-    (round-13 VERDICT item: a deployment that raises the split size —
-    e.g. ``cluster_conf``'s 256 MB — would otherwise rebalance inputs
-    that split fine under it, or vice versa). Accepts Spark's byte-size
+    (a deployment that raises the split size — e.g.
+    ``cluster_conf``'s 256 MB — would otherwise rebalance inputs that
+    split fine under it, or vice versa). Accepts Spark's byte-size
     spellings (plain bytes, or ``128m``/``1g``-style suffixes);
     unreadable values fall back to the 128 MiB default."""
     try:
