@@ -5,17 +5,21 @@ The Spark-native rebuild of the reference's analysis stage semantics
 profile) plus the training-data-pipeline text ops (token counting, quality
 scoring, language/script heuristics, fingerprinting).
 
-Everything here is built-in-function compositions — zero Python UDFs — so
-plans stay inside whole-stage codegen and scale linearly with input bytes:
-the only shuffles are the final ``groupBy(doc_id)`` (or none at all for
-purely per-row ops).
+Most operators are built-in-function compositions, so plans stay inside
+whole-stage codegen and scale linearly with input bytes. The exceptions
+are named where they run: the Arrow ``pandas_udf`` kernels (repetition
+scores, fingerprints) and the BPE merge kernel behind q139/q141.
 """
 
 from __future__ import annotations
 
 import math
+from functools import partial
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -135,8 +139,8 @@ def _word_rep_udf(texts: pd.Series, langs: pd.Series) -> pd.DataFrame:
 # fields — Catalyst's filter pushdown then DUPLICATES the Arrow UDF
 # (one ArrowEvalPython below the filter, one above: 2× the kernel cost,
 # measured 0.92s vs 0.46s at sf0.1). asNondeterministic() only disables
-# that duplication; values are unchanged (oracle re-MATCHed both
-# scales, round 9).
+# that duplication; values are unchanged (oracle MATCH at sf0.01 and
+# sf0.1).
 _word_rep_udf = _word_rep_udf.asNondeterministic()
 
 
@@ -416,9 +420,9 @@ def q41_char_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q42_word_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word 3-gram repetition score, reference U11 (filters.py:574-602):
     tokens from the native ``trivial_tokenize`` twin
-    (functions/tokenize.py — round-9 parity: the reference's IndicNLP
-    punctuation-severing tokenization replicated natively, closing the
-    former ``split(' ')`` declared divergence; the oracle runs the
+    (functions/tokenize.py — the reference's IndicNLP
+    punctuation-severing tokenization replicated natively, so no
+    ``split(' ')`` divergence is declared; the oracle runs the
     value-identical DuckDB twin). score = (Σ counts of 3-grams
     occurring ≥ 2) / total 3-grams; 0.0 (not NULL) when nothing repeats
     — the None-for-0.0 storage quirk stays a declared divergence
@@ -804,8 +808,8 @@ def q111_shared_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed group collects each doc's window starts (bounded: winnowed
     spans, not raw grams), and the splice is a single Arrow-batched mask
     pass per document. Linear end to end; no pairwise anything."""
-    # CPU-heavy per-row stage downstream; single-row-group scan would
-    # serialize it on one core (round-13, guide §2.5/§6) — no-op at scale
+    # CPU-heavy per-row stage downstream; a single-row-group scan would
+    # serialize it on one core — no-op at scale
     docs = load_table_parallel(spark, sf_dir, "documents")
     fpos = (
         docs.select("doc_id", F.explode(_fp_pos_udf("text")).alias("w"))
@@ -1084,8 +1088,8 @@ def q47_multi_n_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (the reference's per-n map, flattened to hashable columns). Docs
     shorter than n get NULL for that n (the reference's None, SURVEY §4.1's
     intended semantics). Zero shuffles."""
-    # CPU-heavy per-row stage downstream; single-row-group scan would
-    # serialize it on one core (round-13, guide §2.5/§6) — no-op at scale
+    # CPU-heavy per-row stage downstream; a single-row-group scan would
+    # serialize it on one core — no-op at scale
     docs = load_table_parallel(spark, sf_dir, "documents")
     return docs.select("doc_id", _multi_rep_udf("text").alias("r")).select(
         "doc_id", "r.*"
@@ -1131,11 +1135,11 @@ def q48_repetition_flag_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     word_repetition_filter path, flagging_and_removal.py:34-47 with the
     intended any-threshold semantics). Both scores come from the
     zero-shuffle Arrow kernels; the filter is a per-row predicate.
-    Round-9 fusion: both kernels ride ONE projection over ONE scan (the
-    kernels emit total 0 / NULL score on too-short input, so the
-    too-short exclusions become post-kernel predicates) — the previous
-    form computed each leg on its own scan and SELF-JOINED the corpus
-    on doc_id, a full shuffle that bought nothing."""
+    Both kernels ride ONE projection over ONE scan (the kernels emit
+    total 0 / NULL score on too-short input, so the too-short
+    exclusions become post-kernel predicates) — one scan per leg would
+    need a self-join of the corpus on doc_id, a full shuffle that buys
+    nothing."""
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -1193,9 +1197,9 @@ def q38_representative_doc_per_group(
 
 # ---------------------------------------------------------------- q116
 def _sentence_sql() -> str:
-    # Both engines run the SAME chunk decomposition (round-8: the Spark
-    # side moved from a lookbehind split to regexp_extract_all, so the
-    # old lookbehind-vs-decomposition equivalence argument is gone):
+    # Both engines run the SAME chunk decomposition (the Spark side
+    # uses regexp_extract_all, not a lookbehind split, so no
+    # split-vs-decomposition equivalence argument is needed):
     # every chunk is the maximal run up to and including the next
     # terminator plus its trailing newlines ([^T]*T\n*,
     # leftmost-first — the reference attaches the captured
@@ -1458,9 +1462,10 @@ def q135_unpivot_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- q139
-#: Bounded BPE merge-loop depth. Each iteration is the identical
-#: vocabulary-bounded query shape; production runs tens of thousands of
-#: iterations with the same per-iteration cost profile.
+#: Bounded BPE merge-loop depth. Each round is one in-memory pass of
+#: the merge kernel over the word table's tokens (one sort of the pair
+#: keys, one merge); production runs tens of thousands of rounds, each
+#: costing time linear-log in the tokens of the vocabulary.
 BPE_ITERS = 4
 
 
@@ -1471,11 +1476,12 @@ def _bpe_chain(iters: int) -> str:
     lists accumulator, which IS greedy left-to-right BPE merging
     (probed: 'aaaaa' + (a,a) → [aa, aa, a]). Built programmatically so
     the iteration count is the single BPE_ITERS constant shared with
-    the Spark loop; q139 (merge table) and q141 (compression curve)
-    SELECT from the same chain, so the two oracles cannot drift. Once
-    no adjacent pair is left b_k is empty and the LEFT JOIN carries
-    seg_{k-1} through unchanged (NULL never matches a symbol), so the
-    curve stays flat, as in the Spark loop."""
+    the Spark side (:func:`_bpe_kernel`); q139 (merge table) and q141
+    (compression curve) SELECT from the same chain, so the two oracles
+    cannot drift. Once no adjacent pair is left b_k is empty and the
+    LEFT JOIN carries seg_{k-1} through unchanged (NULL never matches a
+    symbol), so the curve stays flat, as in the kernel, which adopts a
+    NULL pair."""
     parts = [
         """
     WITH wf AS (
@@ -1533,100 +1539,146 @@ def _bpe_oracle(iters: int) -> str:
     return _bpe_chain(iters) + "\n    " + "\n    UNION ALL ".join(selects)
 
 
-def _bpe_merge_expr(a: str, b: str):
-    """Greedy left-to-right merge of adjacent pair (a, b) in the
-    ``syms`` array — the exact BPE merge rule, as a JVM HOF fold (no
-    Python): walk the symbols, gluing s onto the accumulator tail when
-    tail == a and s == b ('aaaaa' + (a,a) → [aa, aa, a], matching the
-    DuckDB list_reduce twin element for element)."""
-    return F.aggregate(
-        F.col("syms"),
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(F.lit(a + b)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
+#: one row per merge round: iteration 0 is the character segmentation,
+#: iteration k the segmentation after round k's adopted pair (NULL once
+#: no adjacent pair is left)
+_BPE_ROUND_FIELDS = (
+    ("iteration", pa.int64(), LongType()),
+    ("total_tokens", pa.int64(), LongType()),
+    ("tokens_per_occurrence", pa.float64(), DoubleType()),
+    ("left_sym", pa.string(), StringType()),
+    ("right_sym", pa.string(), StringType()),
+    ("pair_count", pa.int64(), LongType()),
+)
+
+
+def _bpe_kernel(batches, rounds: int):
+    """The whole merge loop over the word-frequency table, in one Python
+    worker: ``(word, freq)`` Arrow batches in (NULL rows ignored), one
+    batch of ``rounds + 1`` rows out, laid out as ``_BPE_ROUND_FIELDS``.
+
+    Words are split by code point into integer symbol ids and laid end to
+    end in one token array; ``wt`` carries each token's word frequency
+    and ``end`` marks the last token of a word, so the adjacent pairs are
+    the positions with ``~end``. A round counts every pair with a stable
+    sort of the pair keys ``s1 * n + s2`` and an exact int64
+    ``add.reduceat``. Each key is held in the narrowest unsigned dtype
+    that fits n², so while the alphabet has at most 256 symbols numpy
+    sorts 16-bit keys by radix. The round adopts the top pair by
+    ``(count DESC, s1, s2)`` compared on the symbol strings (the
+    oracle's ORDER BY) and merges it greedily left to right: in a run of
+    overlapping hits, possible only when s1 == s2, every other one is
+    taken ('aaaaa' + (a,a) → [aa, aa, a]). A merge keeps the right token
+    of the pair, which already carries the word's end flag, and drops
+    the left one."""
+    table = pa.Table.from_batches(list(batches))
+    words = pc.fill_null(
+        table["word"].combine_chunks().cast(pa.large_string()), ""
+    )
+    freq = pc.fill_null(table["freq"], 0).to_numpy()
+    lens = pc.utf8_length(words).to_numpy()
+    offsets = np.frombuffer(words.buffers()[1], np.int64)[
+        words.offset : words.offset + len(words) + 1
+    ]
+    chars = str(
+        memoryview(words.buffers()[2] or b"")[offsets[0] : offsets[-1]],
+        "utf-8",
+    )
+    code_points, tok = np.unique(
+        np.frombuffer(chars.encode("utf-32-le"), np.uint32),
+        return_inverse=True,
+    )
+    syms = [chr(c) for c in code_points]
+    tok = tok.astype(np.int32)
+    wt = np.repeat(freq, lens)
+    end = np.zeros(len(tok), bool)
+    end[np.cumsum(lens[lens > 0]) - 1] = True
+    occurrences = int(freq.sum())
+
+    rows = []
+    for it in range(rounds + 1):
+        top = (None, None, None)
+        pos = np.flatnonzero(~end)
+        if it and pos.size:
+            n = len(syms)
+            keys = (tok[pos].astype(np.int64) * n + tok[pos + 1]).astype(
+                np.min_scalar_type(n * n - 1)
+            )
+            order = np.argsort(keys, kind="stable")
+            ranked = keys[order]
+            first = np.flatnonzero(np.r_[True, ranked[1:] != ranked[:-1]])
+            counts = np.add.reduceat(wt[pos[order]], first)
+            best = counts.max()
+            key = min(
+                ranked[first][counts == best],
+                key=lambda k: (syms[k // n], syms[k % n]),
+            )
+            a, b = divmod(int(key), n)
+            top = (syms[a], syms[b], int(best))
+            hits = pos[keys == key]
+            i = np.arange(len(hits))
+            run_start = np.maximum.accumulate(
+                np.where(np.r_[True, np.diff(hits) != 1], i, 0)
+            )
+            take = hits[(i - run_start) % 2 == 0]
+            tok[take + 1] = n
+            syms.append(syms[a] + syms[b])
+            keep = np.ones(len(tok), bool)
+            keep[take] = False
+            tok, wt, end = tok[keep], wt[keep], end[keep]
+        total = int(wt.sum()) if occurrences else None
+        rows.append(
+            (it, total, total and _round6(total / occurrences), *top)
+        )
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(col, typ)
+            for col, (_, typ, _) in zip(zip(*rows), _BPE_ROUND_FIELDS)
+        ],
+        names=[name for name, _, _ in _BPE_ROUND_FIELDS],
     )
 
 
-def _bpe_loop(spark: SparkSession, sf_dir: str, rounds: int):
-    """The Spark side of the BPE merge loop, shared by q139 and q141:
-    ``rounds`` aggregates over the word-frequency table's segmentation,
-    adopting each round's top pair and merging after every round except
-    the last. Returns ``(occurrences, [(total_tokens, top), ...])`` —
-    Σfreq, and per round the token count of that round's segmentation
-    and the pair it adopts, ``(s1, s2, count)`` or None when no adjacent
-    pair is left. Once no pair is left the segmentation cannot change,
-    so later rounds repeat the total without running. On an empty
-    corpus every value is None.
+def _bpe_rounds(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
+    """The BPE merge loop shared by q139 and q141, as one lazy frame:
+    ``rounds + 1`` rows (iteration, total_tokens, tokens_per_occurrence,
+    left_sym, right_sym, pair_count). Iteration 0 is the character
+    segmentation; iteration k carries the pair round k adopted and the
+    token total after merging it. Once no adjacent pair is left the pair
+    is NULL and the total stays flat; on an empty corpus every value but
+    the iteration is NULL, as SQL sums over nothing are.
 
-    Each round is ONE driver action over ONE pair aggregate: every word
-    contributes its adjacent pairs plus a (NULL, NULL) marker row, both
-    weighted by freq, so in the global aggregate on top ``sum(c)`` is
-    Σ freq·|syms| (|syms|−1 pairs + 1 marker per word), the marker group
-    is Σfreq, and ``min(struct(-c, s1, s2))`` over the real pairs is
-    ``ORDER BY c DESC, s1, s2 LIMIT 1`` — the oracle's tie-break, so
-    both engines adopt the same pair. All sums are exact longs.
-
-    Scale shape: the corpus is read once into the word-frequency table;
-    the pair explode and the merge fold (a codegen'd JVM HOF, no Python)
-    run over the vocabulary (Heaps-law sublinear in corpus size), so
-    per-round cost is flat in corpus size (PERF.md q139 sweep). Each
-    segmentation is cached so round k never replays merges 1..k-1 from
-    the scan."""
+    Layout: Spark counts the word-frequency table (explode + groupBy,
+    the part that scales with the corpus), then ``repartition(1)`` sends
+    it to ONE Arrow kernel (:func:`_bpe_kernel`) that runs every round in
+    memory. Building the frame runs no merge round: its only Spark job
+    is ``load_table``'s parquet schema inference. The trade: one Python
+    worker holds the whole word table, so its memory grows with
+    vocabulary size × mean word length — the standard tokenizer-trainer
+    layout (distributed counting, then single-process merges, as in
+    subword-nmt and sentencepiece). A NULL marker row keeps the single
+    partition non-empty, so the kernel also runs on an empty corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    seg = (
+    words = (
         docs.select(F.explode(F.split("text", " ", -1)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("freq"))
-        .select("freq", F.split("word", "").alias("syms"))
-        .cache()
     )
-    cached = [seg]
-    occurrences, out = None, []
-    # per word: a (NULL, NULL) marker entry, then its adjacent pairs
-    pairs = F.expr(
-        "transform(sequence(0, size(syms) - 1), i -> struct("
-        "  IF(i = 0, NULL, element_at(syms, i)) AS s1,"
-        "  IF(i = 0, NULL, element_at(syms, i + 1)) AS s2))"
+    marker = spark.range(1).select(
+        F.lit(None).cast("string").alias("word"),
+        F.lit(None).cast("long").alias("freq"),
     )
-    real = F.col("s1").isNotNull()
-    try:
-        while len(out) < rounds:
-            (row,) = (
-                seg.select("freq", F.explode(pairs).alias("p"))
-                .select("freq", "p.s1", "p.s2")
-                .groupBy("s1", "s2")
-                .agg(F.sum("freq").alias("c"))
-                .agg(
-                    F.sum("c").alias("total"),
-                    F.sum(F.when(~real, F.col("c"))).alias("occ"),
-                    F.min(
-                        F.when(real, F.struct(-F.col("c"), "s1", "s2"))
-                    ).alias("top"),
-                )
-                .collect()
-            )
-            occurrences, best = row["occ"], row["top"]
-            top = best and (best[1], best[2], -best[0])
-            out.append((row["total"], top))
-            if top is None:
-                out += [(row["total"], None)] * (rounds - len(out))
-            elif len(out) < rounds:
-                seg = seg.select(
-                    "freq", _bpe_merge_expr(top[0], top[1]).alias("syms")
-                ).cache()
-                cached.append(seg)
-    finally:
-        for df in cached:
-            df.unpersist()
-    return occurrences, out
+    return (
+        words.unionByName(marker)
+        .repartition(1)
+        .mapInArrow(
+            partial(_bpe_kernel, rounds=rounds),
+            StructType(
+                [StructField(name, typ) for name, _, typ in _BPE_ROUND_FIELDS]
+            ),
+        )
+    )
 
 
 @register("q139_bpe_merge_iterations", oracle=_bpe_oracle(BPE_ITERS))
@@ -1644,13 +1696,13 @@ def q139_bpe_merge_iterations(
     tokenizer's artifact; it stops early once no adjacent pair is left
     (empty on an empty corpus).
 
-    Scale shape: :func:`_bpe_loop` — one vocabulary-bounded aggregate
-    and one one-row collect per iteration."""
-    _, rounds = _bpe_loop(spark, sf_dir, BPE_ITERS)
-    return spark.createDataFrame(
-        [(it, *top) for it, (_, top) in enumerate(rounds, 1) if top],
-        "iteration bigint, left_sym string, right_sym string,"
-        " pair_count bigint",
+    Scale shape: a projection of :func:`_bpe_rounds` — one
+    corpus-scale word count, then every round in one Arrow kernel over
+    the vocabulary; building it runs no Spark action."""
+    return (
+        _bpe_rounds(spark, sf_dir, BPE_ITERS)
+        .where(F.col("left_sym").isNotNull())
+        .select("iteration", "left_sym", "right_sym", "pair_count")
     )
 
 
@@ -1686,19 +1738,13 @@ def q141_bpe_compression_curve(
     adjacent pair is left, and one all-NULL row per iteration on an
     empty corpus (SQL sums over nothing), as in the oracle.
 
-    Scale shape: :func:`_bpe_loop` run one round further than q139 —
-    each round's token total rides the same aggregate that picks the
-    pair. The tokens_per_occurrence ratio divides two exact BIGINTs in
+    Scale shape: the same :func:`_bpe_rounds` frame as q139, projected
+    to its token totals; the kernel counts each total as an exact int64
+    sum. The tokens_per_occurrence ratio divides two exact integers in
     IEEE double in both engines and rounds half-up at 6 digits
     (textstats._round6 discipline)."""
-    occurrences, rounds = _bpe_loop(spark, sf_dir, BPE_ITERS + 1)
-    return spark.createDataFrame(
-        [
-            (it, total, total and _round6(total / occurrences))
-            for it, (total, _) in enumerate(rounds)
-        ],
-        "iteration bigint, total_tokens bigint,"
-        " tokens_per_occurrence double",
+    return _bpe_rounds(spark, sf_dir, BPE_ITERS).select(
+        "iteration", "total_tokens", "tokens_per_occurrence"
     )
 
 
@@ -1745,16 +1791,15 @@ def q146_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-span removal pass (q111) and a dedup-threshold choice.
     Docs too short to shingle (< 3 words) report as decile -1.
 
-    Scale shape (round-6 VERDICT task 5's slimmed exchange, taken one
-    step further): ``n_sh`` is the distinct-shingle array's SIZE,
+    Scale shape: ``n_sh`` is the distinct-shingle array's SIZE,
     computed narrow in the scan projection — no join and no shuffle
     carries it. ``n_unique`` needs NO join-back at all: a df=1 shingle
     by definition has exactly one owning document, so the same
     groupBy(sh) that counts document frequency also carries
     min(doc_id) — for the df=1 survivors that IS the owner, and a
-    doc-sized re-aggregate finishes the count. The old plan's second
-    full-shingle exchange (the join-back of df onto every shingle
-    occurrence) is gone; ONE shingle exchange total, whose combiner
+    doc-sized re-aggregate finishes the count, so no second
+    full-shingle exchange (a join-back of df onto every shingle
+    occurrence) runs; ONE shingle exchange total, whose combiner
     output shrinks with duplicate density exactly where the exact
     histogram was expensive. The exchange carries xxhash64(shingle),
     never the shingle STRING (the q105 pattern — fixed 8 bytes/key
@@ -1767,8 +1812,8 @@ def q146_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper estimate when the exact histogram isn't required."""
     from setu_spark.operators.dedup import distinct_shingles
 
-    # CPU-heavy per-row stage downstream; single-row-group scan would
-    # serialize it on one core (round-13, guide §2.5/§6) — no-op at scale
+    # CPU-heavy per-row stage downstream; a single-row-group scan would
+    # serialize it on one core — no-op at scale
     docs = load_table_parallel(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",

@@ -33,7 +33,8 @@ from oracle_utils import compare_frames, register_views
 SRC = "/root/testdata/sf0.001"
 
 #: every query the round-13 empty-corpus wave touched (guards or the
-#: q77 coalesce), plus q131 whose crash was transitive through q60/q63
+#: q77 coalesce), plus q131 whose crash was transitive through q60/q63,
+#: and q139, whose merge kernel must still run on an empty word table
 WAVE = [
     "q60_cosine_topk",
     "q63_ann_ivf_topk",
@@ -43,6 +44,7 @@ WAVE = [
     "q131_ann_recall_audit",
     "q138_margin_pair_mining_ann",
     "q140_margin_ann_recall_audit",
+    "q139_bpe_merge_iterations",
     "q141_bpe_compression_curve",
     "q143_ivf_cell_balance",
     "q117_partitioned_sink_roundtrip",

@@ -202,8 +202,9 @@ def test_q133_precision_one_on_exact_duplicates(spark, tmp_path):
 
 
 # BPE merge loop (q139 merge table, q141 compression curve): the
-# (count DESC, left, right) tie-break both engines share, the
-# no-pair-left edge, and the loop's Spark job count.
+# (count DESC, left, right) tie-break both engines share, code-point
+# symbols, overlapping (a, a) merges, the no-pair-left edge, the
+# kernel's batch reassembly and the queries' construction job count.
 def _documents_oracle(d, name):
     con = duckdb.connect()
     # Spark writes documents.parquet as a directory of part files
@@ -258,24 +259,83 @@ def test_bpe_single_character_vocabulary(spark, tmp_path):
     _assert_bpe_matches_oracle(spark, d, "q141_bpe_compression_curve")
 
 
-#: Ceiling on the Spark jobs one BPE round may run while q141 is built:
-#: one pair aggregate under one global aggregate is a scan stage plus
-#: two shuffle stages (AQE runs each as its own job), with headroom for
-#: the first round's word-frequency shuffle.
-JOBS_PER_ROUND = 5
+def test_bpe_unicode_symbols_match_oracle(spark, tmp_path):
+    # symbols are code points: Devanagari combining marks, a Latin
+    # diacritic and astral-plane characters each count as one symbol.
+    # Ties compare symbols in code-point (= UTF-8 byte) order, so the
+    # fullwidth ｚ (U+FF5A) wins the second merge over 𝔸 (U+1D538),
+    # which UTF-16 order would put first; the fourth merge breaks a
+    # seven-way tie at 2
+    d = _write_docs(
+        spark,
+        tmp_path,
+        [
+            (1, "नमस्ते नमस्ते éa éa éa éa 😀😀a 😀😀a", "hi", "s"),
+            (2, "𝔸𝔸 𝔸𝔸 𝔸𝔸 ｚｚ ｚｚ ｚｚ", "en", "s"),
+        ],
+    )
+    want = [
+        (1, "é", "a", 4),
+        (2, "ｚ", "ｚ", 3),
+        (3, "𝔸", "𝔸", 3),
+        (4, "त", "े", 2),
+    ][:BPE_ITERS]
+    got = sorted(
+        tuple(r) for r in q139_bpe_merge_iterations(spark, d).collect()
+    )
+    assert got == want
+    _assert_bpe_matches_oracle(spark, d, "q139_bpe_merge_iterations")
+    _assert_bpe_matches_oracle(spark, d, "q141_bpe_compression_curve")
+
+
+def test_bpe_repeated_symbol_runs_merge_greedily(spark, tmp_path):
+    # (a, a) hits overlap: 'aaaaa' -> [aa, aa, a], 'aaa' -> [aa, a];
+    # the second merge adopts (aa, a) at 2, the third (aa, aaa) at 1,
+    # then no adjacent pair is left and the curve stays flat
+    d = _write_docs(spark, tmp_path, [(1, "aaaaa aaa", "en", "s")])
+    got = sorted(
+        tuple(r) for r in q139_bpe_merge_iterations(spark, d).collect()
+    )
+    assert got == [(1, "a", "a", 6), (2, "aa", "a", 2), (3, "aa", "aaa", 1)]
+    curve = sorted(
+        tuple(r) for r in q141_bpe_compression_curve(spark, d).collect()
+    )
+    assert [total for _, total, _ in curve] == [8, 5, 3, 2, 2][
+        : BPE_ITERS + 1
+    ]
+    _assert_bpe_matches_oracle(spark, d, "q139_bpe_merge_iterations")
+    _assert_bpe_matches_oracle(spark, d, "q141_bpe_compression_curve")
+
+
+def test_bpe_kernel_input_split_over_arrow_batches(spark):
+    # the kernel reassembles its word table from however many Arrow
+    # batches Spark sends it: two rows a batch gives the same rows
+    queries = (q139_bpe_merge_iterations, q141_bpe_compression_curve)
+    want = [sorted(q(spark, SF_SMALL).collect()) for q in queries]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = [sorted(q(spark, SF_SMALL).collect()) for q in queries]
+    finally:
+        spark.conf.set(key, old)
+    assert got == want and len(want[0]) == BPE_ITERS
 
 
 def test_q141_construct_job_count(spark):
-    """q141 builds its result by running the merge loop on the driver;
-    a second aggregate or collect per round shows up here as jobs."""
+    """Building q139 or q141 runs no merge round: the frame is lazy, so
+    the only Spark job allowed is ``load_table``'s parquet schema
+    inference. An eager collect or a cached segmentation shows up here
+    as extra jobs."""
     sc = spark.sparkContext
-    group = "q141-construct-jobs"
-    spark.catalog.clearCache()
-    sc.setJobGroup(group, "construct")
-    try:
-        q141_bpe_compression_curve(spark, SF_SMALL)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < jobs <= JOBS_PER_ROUND * (BPE_ITERS + 1), jobs
+    for query in (q139_bpe_merge_iterations, q141_bpe_compression_curve):
+        group = f"{query.__name__}-construct-jobs"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, "construct")
+        try:
+            query(spark, SF_SMALL)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= 1, (query.__name__, jobs)

@@ -32,8 +32,9 @@ SENSITIVE = [
     "q111_shared_span_removal",
     # round 6: the cogroup per-cell top-k kernel (cell contents must be
     # the ONLY input — a batch/partition-boundary leak would corrupt
-    # the candidate set) and the iterative merge loop (per-iteration
-    # top-pair collect must be layout-independent)
+    # the candidate set) and the BPE merge kernel (its word table
+    # arrives in whatever row order the word-count shuffle leaves,
+    # which must not change the adopted pairs)
     "q138_margin_pair_mining_ann",
     "q139_bpe_merge_iterations",
     # round 6 session 2: the CC-funnel split (iterative label
