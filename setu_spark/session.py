@@ -15,6 +15,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The local-mode JVM heap when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
+    min(32g, ⅔ of physical memory), in megabytes. ``phys_bytes``
+    defaults to this machine's physical memory (``os.sysconf``). A
+    heap ceiling above physical memory lets the JVM grow until the OS
+    kills it; the remaining third is for the Python workers and the
+    page cache."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32 << 10, phys_bytes * 2 // 3 >> 20))}m"
+
+
 #: Conf applied to sessions we create ourselves (tests, bench, CLI).
 #: Chosen for local[32] testing but sized so the same code runs unchanged on
 #: a multi-executor cluster: AQE coalesces the 2×cores shuffle partitions at
@@ -34,10 +47,13 @@ DEFAULT_CONF = {
     "spark.driver.maxResultSize": "4g",
     # local mode = ONE JVM for driver + all 32 worker threads. The PySpark
     # default heap (1g) makes every wide op GC-bound or OOM at ~100k docs;
-    # size it like the executor fleet it stands in for. (Applied at JVM
-    # launch — only effective for the process's first session, which is why
-    # it lives here in the factory and not in per-query code.)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    # size it like the executor fleet it stands in for, within the box's
+    # memory. (Applied at JVM launch — only effective for the process's
+    # first session, which is why it lives here in the factory and not in
+    # per-query code.)
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+    ),
     "spark.ui.enabled": "false",
     # Events testdata has shipped as both TIMESTAMP(NANOS) and
     # TIMESTAMP(MICROS) across generations. Spark 4 refuses to read the

@@ -263,6 +263,21 @@ def test_cluster_conf_composes_over_defaults():
     assert big["spark.dynamicAllocation.maxExecutors"] == "2000"
 
 
+def test_default_driver_memory_fits_the_machine():
+    """The default heap is ⅔ of physical memory, capped at 32g — never
+    a ceiling the OS cannot back."""
+    import os
+
+    from setu_spark.session import default_driver_memory
+
+    gib = 1 << 30
+    assert default_driver_memory(15 * gib) == "10240m"
+    assert default_driver_memory(64 * gib) == "32768m"
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    here = int(default_driver_memory()[:-1]) << 20
+    assert here <= min(32 * gib, phys * 2 // 3)
+
+
 def test_cluster_conf_accepted_by_builder(spark):
     """Every key must be a legal Spark conf name-value (the builder
     accepts arbitrary keys, but RuntimeConfig rejects malformed values

@@ -449,3 +449,57 @@ def test_semdedup_tau_above_one_takes_raw_branch(spark):
     out = semantic_dedup(df, 4, 2, tau=1.5).collect()
     assert out and all(not r.sem_removed for r in out)
     assert all(r.max_sim_to_keeper == -1.0 for r in out)
+
+
+@pytest.fixture(scope="module")
+def zero_norm_dir():
+    """sf0.001's embeddings with every vec_id % 97 = 4 row (4, 101, …,
+    489) set to the all-zero vector. vec_id 4 sits in both k-means init
+    sets (q85's 8 lowest ids and q143's ⌈√500⌉ = 23), so a zero vector
+    is scored as a member AND as a centroid."""
+    import os
+    import shutil
+    import tempfile
+
+    import duckdb
+
+    from tests.conftest import SF_SMALL
+
+    d = tempfile.mkdtemp(prefix="zeronorm_ci_")
+    src = os.path.join(SF_SMALL, "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * REPLACE (CASE WHEN vec_id % 97 = 4
+              THEN list_transform(embedding, x -> CAST(0 AS FLOAT))
+              ELSE embedding END AS embedding) FROM '{src}')
+            TO '{d}/embeddings.parquet' (FORMAT PARQUET)"""
+    )
+    con.close()
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "name", ["q85_kmeans_clusters", "q143_ivf_cell_balance"]
+)
+def test_zero_norm_vectors_match_oracle(spark, zero_norm_dir, name):
+    """A zero vector has no direction: the cosine block floors both
+    norms at 1e-12, so it scores 0 against every cell (and a zero
+    centroid scores 0 against every vector) instead of NaN — the
+    ``greatest(norm, 1e-12)`` of the k-means oracle CTE, which q85
+    and q143 both replay."""
+    import duckdb
+
+    from tests.oracle_utils import compare_frames
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{zero_norm_dir}/embeddings.parquet')"
+    )
+    try:
+        got = entrymod.queries()[name](spark, zero_norm_dir).toPandas()
+        want = con.execute(entrymod.oracle_sql()[name]).df()
+    finally:
+        con.close()
+    assert not compare_frames(got, want)
