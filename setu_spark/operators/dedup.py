@@ -34,6 +34,7 @@ bit-identical to the DuckDB oracle.
 from __future__ import annotations
 
 import functools
+import logging
 import operator
 
 import pandas as pd
@@ -243,7 +244,7 @@ def lsh_candidate_pairs(
     The self-join keys on (band, band_hash): Spark hash-partitions both
     sides identically, so each bucket's pairs are generated locally.
 
-    ``distinct=False`` (round-14) skips the pair-dedup exchange and
+    ``distinct=False`` skips the pair-dedup exchange and
     returns the raw banded pairs — one row per SHARED BAND, so a pair
     colliding in k bands appears k (≤ ``num_perm/rows_per_band``)
     times. For pair-LISTING consumers (q52 and its oracle) distinct is
@@ -396,7 +397,7 @@ def pair_est_jaccard(
     of agreeing minhashes) to candidate ``(id_a, id_b)`` pairs and keep
     those at/above ``threshold``. DataFrame-in helper shared by q52 and
     tools/funnel_sweep.py so the production query and the measured
-    funnel cannot desynchronize (round-5 review)."""
+    funnel cannot desynchronize."""
     sa = sig.alias("sa")
     sb = sig.alias("sb")
     eq_terms = [
@@ -423,7 +424,7 @@ def q52_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature table feeds four plan branches (two band sides, two
     # verify joins) — cache it so signatures are computed once
     sig = scoped_cache("q52_minhash_lsh_pairs", minhash_signatures(docs))
-    # pair-listing budget (round-10 VERDICT task 4): the pair LIST is
+    # pair-listing budget: the pair LIST is
     # quadratic in copy count by semantics; fail loudly instead of
     # quietly shuffling billions of candidate rows on a dup-dense corpus
     return pair_budget_gate(
@@ -481,11 +482,11 @@ def q108_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance for every surviving pair and -1 (filtered, as the
     unbounded gate also would) otherwise — identical output, but cost
     per pair drops from O(len²) to O(len·K), which is what makes the
-    verify stage affordable on book-length documents. (Round-13
-    optimization: the bound was previously the GLOBAL max length,
-    which cost a whole extra aggregate action — a full corpus pass —
-    before the verify plan could even be built; the per-row bound is
-    computable inside the join row and strictly tighter.)"""
+    verify stage affordable on book-length documents. (A GLOBAL
+    max-length bound would cost a whole extra aggregate action — a
+    full corpus pass — before the verify plan could even be built; the
+    per-row bound is computable inside the join row and strictly
+    tighter.)"""
     docs = load_table(spark, sf_dir, "documents")
     return edit_verify(docs, q52_minhash_lsh_pairs(spark, sf_dir))
 
@@ -498,15 +499,15 @@ def edit_verify(
     """Bounded edit-distance confirmation of ``(id_a, id_b, ...)`` pairs
     against a ``(doc_id, text)`` corpus — the q108 stage as a
     DataFrame-in helper shared with tools/funnel_sweep.py so the
-    production query and the measured funnel cannot desynchronize
-    (round-5 review). Extra pair columns (e.g. ``est_jaccard``) pass
+    production query and the measured funnel cannot desynchronize.
+    Extra pair columns (e.g. ``est_jaccard``) pass
     through untouched."""
     from fractions import Fraction
 
     # PER-PAIR bound K = floor((1-T) · max(len_a, len_b)) as an exact
     # rational (int((1-T)*len) on floats happens to be right for T=0.6
     # but can under-bound K when the float product rounds down across
-    # an integer — round-4 ADVICE). Any pair passing the similarity
+    # an integer). Any pair passing the similarity
     # gate has dist ≤ floor((1-T)·its own max_len) = K(pair), so the
     # bounded form returns the exact distance for every survivor and
     # -1 (filtered, as the unbounded gate also would) otherwise. The
@@ -675,7 +676,7 @@ def q54_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is dropped, matching the oracle (its token explode yields no rows
     # for NULL and the doc never reaches the fingerprint aggregate)
     # simhash_column is a heavy per-row HOF aggregate; single-row-group
-    # scan would serialize it on one core (round-13, guide §2.5/§6) —
+    # scan would serialize it on one core —
     # the rebalance is a no-op at scale
     docs = load_table_parallel(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
@@ -737,148 +738,85 @@ def simhash_column(
 
 # ------------------------------------------------------- survivor selection
 
-#: Pair-row count at or below which connected_components finishes the
-#: graph driver-locally (union-find over a bounded collect) instead of
-#: paying the iterative loop's per-round job overhead. The count is of
-#: RAW input rows (mirrored and repeated edges count each time), so the
-#: collect never exceeds it. 500k collected Row objects plus
-#: the union-find dicts is a few hundred MB of driver heap — real but
-#: bounded, and well under both driver.maxResultSize and the 128 GiB
-#: driver this targets — while the iterative path costs ~1s of
-#: scheduler overhead PER ROUND even on a 366-edge graph (measured at
-#: sf0.1). The same hybrid shape as the large-star/small-star CC
-#: literature: distributed rounds only while the graph is genuinely
-#: big.
-LOCAL_CC_MAX_EDGES = 500_000
-
-#: Rounds the last distributed connected_components call took —
-#: instrumentation for benchmarks/tests of the pointer-jump speedup
-#: (0 when the union-find fast path handled the graph).
-LAST_CC_ROUNDS = 0
+#: One record per run-time choice an operator makes from the data it
+#: sees, with the inputs of that choice as record attributes.
+DISPATCH_LOG = logging.getLogger("setu_spark.dispatch")
 
 
-def _local_components(und_edges, spark, dtype: str) -> DataFrame:
-    """Union-find finish for a small pair graph: exact min-id component
-    labels, one collect + one createDataFrame — no iterative jobs.
-    ``und_edges`` is a collected list of (u, v) rows.
+def _min_roots(u, v):
+    """Connected components of the edge list ``(u[i], v[i])`` in numpy:
+    returns ``(nodes, roots)`` — every distinct node once, sorted, with
+    the minimum node of its component.
 
-    The returned frame carries an explicit ``broadcast`` hint: a
-    ``createDataFrame`` relation has no stats (``Scan ExistingRDD``,
-    default sizeInBytes = huge), so without it the planner joins these
-    few-hundred-row labels back to the rep set via SortMergeJoin with
-    TWO exchanges. The relation is driver-bounded by construction —
-    this path only runs at ≤ ``LOCAL_CC_MAX_EDGES`` pair rows, so at
-    most 2·bound nodes ≈ 16 MB of (long, long) rows at the 500k cap —
-    well inside executor broadcast budgets."""
-    parent: dict = {}
+    Hook + full pointer jumping over node indices (``np.unique`` order,
+    so the smallest index is the smallest id): every iteration hooks
+    the larger root of each edge whose endpoints' roots differ under
+    the smaller one (``minimum.at`` keeps the least of competing
+    hooks), then jumps pointers until every node points at a root
+    (``lab[lab] == lab``). A pointer never increases and never leaves
+    its component, so the one root left per component is its minimum.
+    Permuted-id chains need ~log2(n) iterations (10 on 20,001 nodes,
+    11 on 200,001); min-label propagation with one jump per iteration
+    needs O(diameter) there (8,475 iterations on 20,001 nodes)."""
+    import numpy as np
 
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in und_edges:
-        u, v = row[0], row[1]
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-    label: dict = {}
-    for node in parent:
-        r = find(node)
-        if r not in label or node < label[r]:
-            label[r] = node
-    rows = [(n, label[find(n)]) for n in parent]
-    return F.broadcast(
-        spark.createDataFrame(
-            rows, schema=f"doc_id {dtype}, component {dtype}"
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u) :]
+    lab = np.arange(len(nodes))
+    while True:
+        ra, rb = lab[a], lab[b]
+        hook = ra != rb
+        if not hook.any():
+            return nodes, nodes[lab]
+        np.minimum.at(
+            lab, np.maximum(ra, rb)[hook], np.minimum(ra, rb)[hook]
         )
-    )
+        while not np.array_equal(up := lab[lab], lab):
+            lab = up
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    local_edge_bound: int = LOCAL_CC_MAX_EDGES,
-) -> DataFrame:
-    """Connected components over near-duplicate ``(id_a, id_b)`` pairs
-    by iterative min-label propagation: every doc starts as its own
-    component; each round, a doc adopts the smallest component id among
-    itself and its neighbors; fixpoint when an iteration changes
-    nothing. Returns (doc_id, component) — dedup keeps one survivor per
-    component (the min id, which is exactly the component label).
+def _star_forest(batches):
+    """``mapInPandas`` body: one partition's ``(u, v)`` edges in, every
+    node of the partition once out as ``(doc_id, component)``, labelled
+    with the minimum node of its component among these edges
+    (:func:`_min_roots`) — a forest of stars."""
+    import numpy as np
 
-    Input contract: ``pairs`` may be in either orientation, repeat
-    edges (e.g. the raw banded pairs of ``lsh_candidate_pairs(distinct=
-    False)``, one row per shared band) and hold self-loops. Duplicate
-    edges change nothing algebraically (the min-label loop aggregates
-    by min; union-find unions idempotently), so no pair-dedup shuffle
-    runs up front: the pairs are projected to ``(least, greatest)`` —
-    no exchange, and the identity on canonical pairs — and cached.
+    cols = [(b["u"].to_numpy(), b["v"].to_numpy()) for b in batches]
+    if cols:
+        nodes, roots = _min_roots(*(np.concatenate(c) for c in zip(*cols)))
+        yield pd.DataFrame({"doc_id": nodes, "component": roots})
 
-    Dispatch: ``count()`` on the CACHED relation computes + stores every
-    partition in one parallel job. At ≤ ``local_edge_bound`` RAW rows
-    (conservative: raw ≥ distinct, so the collect stays ≤ bound rows)
-    the graph finishes with a driver-local union-find — label-identical
-    by construction, and one cache-read collect instead of ~4
-    scheduler-bound jobs per round (2.8s → 0.1s on the 366-edge sf0.1
-    graph). A ``take(bound+1)`` probe is no cheaper: executeTake scans
-    partitions in sequential scale-up rounds (q149 1.22×, q150 1.30×
-    measured). Otherwise the distributed path dedups off the cache
-    before the loop, so rounds never shuffle duplicate edges. Set
-    ``local_edge_bound=0`` to force the distributed path (tests pin the
-    two paths label-equal).
 
-    Distributed scale shape: each round is the 1-hop min-propagation
-    (edge join + min-agg) plus a POINTER-JUMP (labels re-labeled through
-    themselves, one self-join) — the jump composes reachability so the
-    label's reach roughly DOUBLES per round: rounds go O(diameter) →
-    O(log diameter) — measured 5 → 3 rounds (24.7s → 18.8s) on the
-    1M-edge 200k-chain fixture, and 14 rounds on a single
-    diameter-9999 chain the 1-hop loop could never finish inside any
-    sane iteration cap. The jump preserves the invariant "label(n) is
-    the id of some node in n's component, ≤ n" (label(n) is in the
-    component; its label is too, and is no larger), and convergence is
-    still detected on the 1-hop step alone: at a 1-hop fixpoint labels
-    are constant per component (any edge with unequal labels would
-    change one side), so the jump is also a no-op there.
-    ``localCheckpoint`` cuts lineage each round (iterative DataFrame
-    plans otherwise grow exponentially)."""
-    a, b = F.col("id_a"), F.col("id_b")
-    und = pairs.select(
-        F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-    ).cache()
-    if und.count() <= local_edge_bound:
-        dtype = und.schema["u"].dataType.simpleString()
-        rows = und.collect()
-        und.unpersist(False)
-        return _local_components(rows, pairs.sparkSession, dtype)
-    # ded is canonical (u ≤ v) and distinct, so the flipped copy is
-    # disjoint from it except for self-loops: no second distinct
-    # shuffle needed to symmetrize
-    ded = und.distinct()
-    edges = (
-        ded.union(
-            ded.filter(F.col("u") != F.col("v")).select(
-                F.col("v").alias("u"), F.col("u").alias("v")
-            )
-        )
-        .localCheckpoint()
-    )
-    und.unpersist(False)
-    labels = (
-        edges.select(F.col("u").alias("doc_id"))
+def _min_label_loop(forest: DataFrame, max_iterations: int):
+    """The distributed finish over a multi-partition star forest:
+    ``(labels, rounds)``. Labels start at each node's least root; each
+    round is the 1-hop min-propagation (edge join + min-agg) plus a
+    POINTER-JUMP (labels re-labeled through themselves, one self-join)
+    that roughly doubles a label's reach per round on sorted-id chains:
+    14 rounds on a single diameter-9999 chain the 1-hop loop could never
+    finish inside any sane iteration cap. The jump preserves the
+    invariant "label(n) is the id of some node in n's component, ≤ n",
+    and convergence is still detected on the 1-hop step alone: at a
+    1-hop fixpoint labels are constant per component (any edge with
+    unequal labels would change one side), so the jump is also a no-op
+    there. ``localCheckpoint`` cuts lineage each round (iterative
+    DataFrame plans otherwise grow exponentially)."""
+    # a star edge (root, node) is canonical (root < node); distinct drops
+    # the copies that partitions sharing a node emit, and the flipped
+    # copy is disjoint from it: no second distinct shuffle to symmetrize
+    ded = (
+        forest.filter(F.col("doc_id") != F.col("component"))
+        .select(F.col("component").alias("u"), F.col("doc_id").alias("v"))
         .distinct()
-        .withColumn("component", F.col("doc_id"))
     )
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = 0
-    for _ in range(max_iterations):
-        LAST_CC_ROUNDS += 1
+    edges = ded.union(
+        ded.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint()
+    labels = forest.groupBy("doc_id").agg(
+        F.min("component").alias("component")
+    )
+    for rounds in range(1, max_iterations + 1):
         neighbor_min = (
             edges.join(
                 labels.withColumnRenamed("doc_id", "v").withColumnRenamed(
@@ -924,23 +862,81 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        changed = jumped.filter("chg").limit(1).count()
         labels = jumped.select("doc_id", "component")
-        if changed == 0:
-            break
-    else:
-        # Exiting by exhaustion means non-converged labels — which would
-        # silently mismatch the exact transitive-closure oracle. A
-        # duplicate chain longer than max_iterations hops is a sign the
-        # candidate graph is pathological (e.g. LSH banding misconfigured
-        # into one giant component); fail loudly instead of returning
-        # partial components.
-        raise RuntimeError(
-            f"connected_components did not converge within "
-            f"{max_iterations} iterations — labels still changing; "
-            "raise max_iterations or inspect the pair graph for "
-            "degenerate chains"
+        if jumped.filter("chg").limit(1).count() == 0:
+            return labels, rounds
+    # Exiting by exhaustion means non-converged labels — which would
+    # silently mismatch the exact transitive-closure oracle. A
+    # duplicate chain longer than max_iterations hops is a sign the
+    # candidate graph is pathological (e.g. LSH banding misconfigured
+    # into one giant component); fail loudly instead of returning
+    # partial components.
+    raise RuntimeError(
+        f"connected_components did not converge within "
+        f"{max_iterations} iterations — labels still changing; "
+        "raise max_iterations or inspect the pair graph for "
+        "degenerate chains"
+    )
+
+
+def connected_components(
+    pairs: DataFrame, max_iterations: int = 20
+) -> DataFrame:
+    """Connected components over near-duplicate ``(id_a, id_b)`` pairs:
+    (doc_id, component) for every node, component = the min member id —
+    dedup keeps one survivor per component, exactly the component label.
+
+    Input contract: ``pairs`` may be in either orientation, repeat
+    edges (e.g. the raw banded pairs of ``lsh_candidate_pairs(distinct=
+    False)``, one row per shared band) and hold self-loops. Duplicate
+    edges change nothing algebraically (hooks and labels aggregate by
+    min), so no pair-dedup shuffle runs up front: the pairs are
+    projected to ``(least, greatest)`` — no exchange, and the identity
+    on canonical pairs.
+
+    One path — contract locally, then iterate globally (the large-star /
+    small-star shape of Kiveris et al., SoCC 2014). The edges shuffle by
+    ``u`` and one ``mapInPandas`` kernel per partition solves that
+    partition's edges in numpy (:func:`_star_forest`), emitting a forest
+    of stars ``(node, local min root)``, which ``localCheckpoint``
+    materializes. With ONE forest partition, AQE measured the shuffle
+    below its advisory size and coalesced it, so the kernel saw every
+    edge and its roots are final: the checkpoint is the only eager
+    action, and the forest comes back broadcast-hinted (without the
+    hint its estimated size flips the funnel's join-back to a
+    sort-merge join at sf0.1). With several, :func:`_min_label_loop`
+    finishes on the star edges.
+
+    Each call logs one :data:`DISPATCH_LOG` record whose ``partitions``
+    and ``rounds`` attributes carry the forest's partition count and
+    the rounds the loop ran (0 on one partition)."""
+    a, b = F.col("id_a"), F.col("id_b")
+    und = pairs.select(
+        F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
+    )
+    typ = und.schema["u"].dataType
+    forest = (
+        und.repartition("u")
+        .mapInPandas(
+            _star_forest,
+            StructType(
+                [StructField("doc_id", typ), StructField("component", typ)]
+            ),
         )
+        .localCheckpoint()
+    )
+    partitions = forest.rdd.getNumPartitions()
+    labels, rounds = (
+        (F.broadcast(forest), 0)
+        if partitions <= 1
+        else _min_label_loop(forest, max_iterations)
+    )
+    DISPATCH_LOG.info(
+        "connected_components: %d forest partitions, %d rounds",
+        partitions,
+        rounds,
+        extra={"partitions": partitions, "rounds": rounds},
+    )
     return labels
 
 
@@ -989,9 +985,9 @@ def exact_collapsed_components(
       / ``component IS NOT NULL`` need no per-rep intermediate — and
       the plan avoids a second full scan→groupBy(k) recompute of the
       rep set.
-    * the CC labels arrive broadcast-hinted from the local dispatch
-      (see :func:`_local_components`), and the raw banded candidate
-      pairs go into CC with no pair-dedup exchange."""
+    * the CC labels arrive broadcast-hinted when the graph fits one
+      forest partition (see :func:`connected_components`), and the raw
+      banded candidate pairs go into CC with no pair-dedup exchange."""
     # Null-safe: for NULL text the size(...) >= N predicate evaluates to
     # NULL, and a bare filter(ok)/filter(~ok) split would drop the row
     # from BOTH branches. NULL-text docs must land in short_full with
@@ -1037,7 +1033,7 @@ def exact_collapsed_components(
     rep_docs = reps.select(F.col("rep_id").alias("doc_id"), "text")
     sig = minhash_signatures(rep_docs)
     # raw banded pairs: CC tolerates duplicate edges, so the pair-dedup
-    # exchange (a whole stage on this eager dispatch path) is skipped
+    # exchange (a whole stage before CC's eager checkpoint) is skipped
     pairs = lsh_candidate_pairs(sig, distinct=False)
     comps = connected_components(pairs)
     long_full = doc2rep.join(
@@ -1177,9 +1173,9 @@ def q125_dedup_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor's chars without a self-join), and the histogram groups the
     ≤|components| rows — negligible next to the funnel."""
     docs = load_table(spark, sf_dir, "documents")
-    # n_chars rides the funnel's carry (round-14): the old
-    # docs⋈funnel join-back on doc_id cost two exchanges + a join
-    # per consumer for a column the k-shuffle can carry for free
+    # n_chars rides the funnel's carry: a docs⋈funnel join-back on
+    # doc_id cost two exchanges + a join per consumer for a column the
+    # k-shuffle can carry for free
     full = exact_collapsed_components(docs, carry=("n_chars",)).select(
         "doc_id", "component", "n_chars"
     )
@@ -1354,7 +1350,7 @@ def q57_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
-    # pair-listing budget (round-10 VERDICT task 4): the estimate reads
+    # pair-listing budget: the estimate reads
     # only the narrow (b, band_val) keys off the same cached projection
     return pair_budget_gate(
         out, bands, ["b", "band_val"],
@@ -1863,7 +1859,7 @@ def q149_component_source_purity(
     (component) aggregate with a distinct count whose domain is
     |sources| (small by construction), and a ≤|sources|-row histogram."""
     docs = load_table(spark, sf_dir, "documents")
-    # source rides the funnel's carry (round-14, see q125)
+    # source rides the funnel's carry (see q125)
     full = exact_collapsed_components(docs, carry=("source",)).select(
         "doc_id", "component", "source"
     )
@@ -1933,7 +1929,7 @@ def q150_quality_survivor_delta(
     self-join), min-id survivor and its chars ride ``min``/``min_by``
     in the same shuffle — then a one-row rollup."""
     docs = load_table(spark, sf_dir, "documents")
-    # n_chars rides the funnel's carry (round-14, see q125)
+    # n_chars rides the funnel's carry (see q125)
     full = exact_collapsed_components(docs, carry=("n_chars",)).select(
         "doc_id", "component", "n_chars"
     )
@@ -1975,8 +1971,7 @@ def q150_quality_survivor_delta(
 
 
 # ---------------------------------------------------------------- q151
-# Joint text↔embedding dedup agreement (round-7 VERDICT task 5: the
-# gap-filling new query, not a variant). similarity.py is imported
+# Joint text↔embedding dedup agreement. similarity.py is imported
 # before this module by __spark_entry__, so the module-level import
 # adds no registration reordering.
 from setu_spark.operators.similarity import (  # noqa: E402
@@ -2238,8 +2233,7 @@ def ann_admission(
     probe anything and an equi-join on the embedding would silently
     drop it (NULL keys never match) — such rows are pre-split into an
     explicit ``novel`` decision with n_candidates 0, keeping the
-    every-row-gets-a-decision contract for malformed batch rows
-    (round-9 ADVICE).
+    every-row-gets-a-decision contract for malformed batch rows.
 
     Scale shape — COLLAPSE-FIRST (the funnel lesson applied to
     admission): every output column is a pure function of the incoming
@@ -2333,8 +2327,8 @@ def q152_ann_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # q151 production form: collapse-first joint agreement ------------------
-# (_eid_col, the embedding-class key, moved to similarity.py in round 10
-# so q123's collapsed pairwise stage can share it — imported above.)
+# (_eid_col, the embedding-class key, lives in similarity.py so q123's
+# collapsed pairwise stage can share it — imported above.)
 
 
 #: Joint-class duplicate fraction above which q151 switches from the
@@ -2361,7 +2355,7 @@ def q151_joint_dedup_agreement(
     work) — see :data:`JOINT_COLLAPSE_DUP_FRAC` and the two
     implementations below."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Two-stage chooser (round-14): joint (text, embedding) classes
+    # Two-stage chooser: joint (text, embedding) classes
     # REFINE text classes, so joint_dup ≤ text_dup always — when even
     # the TEXT duplicate fraction is below the threshold, the joint one
     # is too and the raw branch is the original decision, reached from

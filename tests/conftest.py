@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import logging
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -30,3 +32,34 @@ def duck():
     con = duckdb.connect()
     yield con
     con.close()
+
+
+@contextmanager
+def uncoalesced(spark):
+    """Inside the block AQE keeps every one of the session's shuffle
+    partitions, so ``connected_components`` shuffles even a tiny graph
+    into several forest partitions and finishes it in its distributed
+    loop."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def cc_log(caplog):
+    """Returns a function giving the last ``connected_components``
+    record on the ``setu_spark.dispatch`` logger (attributes
+    ``partitions`` and ``rounds``)."""
+    caplog.set_level(logging.INFO, logger="setu_spark.dispatch")
+
+    def last():
+        return [
+            r for r in caplog.records
+            if r.name == "setu_spark.dispatch" and hasattr(r, "rounds")
+        ][-1]
+
+    return last

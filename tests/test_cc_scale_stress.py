@@ -1,26 +1,26 @@
-"""Distributed CC one decade up (round-12 VERDICT task 7).
+"""Distributed CC one decade up.
 
 The pointer-jump loop has committed evidence at 1M edges / 200k
-length-5 chains (3 rounds / 18.8s, PERF.md round 8) and on a single
+length-5 chains (3 rounds / 18.8s, PERF.md) and on a single
 diameter-9999 chain (14 rounds — the O(log d) regime; the 1-hop loop
 could never finish inside any sane cap). This suite probes one decade
-up, where a regression to O(diameter) rounds or an accidental
-local-path dispatch actually SHOWS:
+up, where a regression to O(diameter) rounds, or a large graph that
+never leaves one forest partition, actually SHOWS:
 
-  * 10M edges / 2M length-5 chains / 12M nodes — round count must stay
-    at the diameter-bound 3 (rounds scale with diameter, not edge
-    volume), the distributed path must dispatch (10M ≫ the 500k
-    local_edge_bound), and the output must satisfy the exact component
-    invariants (2M components, every size 6, label = min node id)
-    checked DISTRIBUTEDLY — no 12M-row collect.
-  * a single diameter-20000 chain — one doubling past the committed
-    9999-chain probe: the jump regime needs ~+1 round (≤16), while an
-    O(diameter) regression needs 20000 rounds and trips the
-    max_iterations raise long before.
+  * 10M edges / 2M length-5 chains / 12M nodes — AQE must keep the
+    edge shuffle at several forest partitions (so the per-partition
+    kernels only contract the graph and the distributed loop finishes
+    it), the round count must stay at the diameter-bound 3 (rounds
+    scale with diameter, not edge volume), and the output must
+    satisfy the exact component invariants (2M components, every size
+    6, label = min node id) checked DISTRIBUTEDLY — no 12M-row collect.
+  * a single diameter-20000 chain, at the session's 8 forest
+    partitions — one doubling past the committed 9999-chain probe: the
+    jump regime needs ~+1 round (≤16), while an O(diameter) regression
+    needs 20000 rounds and trips the max_iterations raise long before.
 
 Marked slow: the two graphs cost ~2-4 min together on local[32]; the
-suite runs under SETU_SLOW=1 only. Wall/rounds land in PERF.md round
-13.
+suite runs under SETU_SLOW=1 only. Wall/rounds land in PERF.md.
 """
 
 from __future__ import annotations
@@ -31,6 +31,8 @@ import time
 import pytest
 
 from pyspark.sql import functions as F
+
+from tests.conftest import uncoalesced
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SETU_SLOW"),
@@ -56,7 +58,7 @@ def _chain_graph(spark, n_edges: int):
     )
 
 
-def test_ten_million_edge_chains(spark):
+def test_ten_million_edge_chains(spark, cc_log):
     import setu_spark.operators.dedup as dd
 
     n_chains = N_EDGES // CHAIN_LEN
@@ -75,20 +77,22 @@ def test_ten_million_edge_chains(spark):
     n_nodes = labels.count()
     wall = time.perf_counter() - t0
     print(
-        f"\n[cc-stress] 10M edges: {dd.LAST_CC_ROUNDS} rounds, "
-        f"{wall:.1f}s, {n_comp} components"
+        f"\n[cc-stress] 10M edges: {cc_log().partitions} forest "
+        f"partitions, {cc_log().rounds} rounds, {wall:.1f}s, "
+        f"{n_comp} components"
     )
     assert bad == 0
     assert n_comp == n_chains
     assert n_nodes == n_chains * (CHAIN_LEN + 1)
-    # the distributed path must have dispatched (rounds instrumented),
-    # and the jump regime holds: diameter-5 graphs converge in 3
-    # rounds regardless of edge volume — a 4th round at 10M edges
-    # means the jump or the convergence fold regressed
-    assert dd.LAST_CC_ROUNDS == 3, dd.LAST_CC_ROUNDS
+    # the distributed loop must have run, and the jump regime holds:
+    # diameter-5 graphs converge in 3 rounds regardless of edge volume
+    # — a 4th round at 10M edges means the kernel, the jump or the
+    # convergence fold regressed
+    assert cc_log().partitions > 1, cc_log().partitions
+    assert cc_log().rounds == 3, cc_log().rounds
 
 
-def test_diameter_twenty_thousand_chain(spark):
+def test_diameter_twenty_thousand_chain(spark, cc_log):
     import setu_spark.operators.dedup as dd
 
     n = 20_000  # edges; diameter-20000 path, nodes 0..20000
@@ -96,19 +100,19 @@ def test_diameter_twenty_thousand_chain(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     t0 = time.perf_counter()
-    labels = dd.connected_components(
-        chain, max_iterations=25, local_edge_bound=0
-    )
+    with uncoalesced(spark):
+        labels = dd.connected_components(chain, max_iterations=25)
     one = labels.groupBy("component").agg(
         F.count("*").alias("n"), F.min("doc_id").alias("lo")
     ).collect()
     wall = time.perf_counter() - t0
     print(
-        f"\n[cc-stress] diameter-20000: {dd.LAST_CC_ROUNDS} rounds, "
+        f"\n[cc-stress] diameter-20000: {cc_log().rounds} rounds, "
         f"{wall:.1f}s"
     )
     assert len(one) == 1
     assert one[0].n == n + 1 and one[0].lo == 0 == one[0].component
     # one doubling past the committed diameter-9999 probe (14 rounds):
     # the O(log d) regime needs ~15; an O(d) regression needs 20000
-    assert dd.LAST_CC_ROUNDS <= 16, dd.LAST_CC_ROUNDS
+    assert cc_log().partitions > 1, cc_log().partitions
+    assert cc_log().rounds <= 16, cc_log().rounds

@@ -14,6 +14,7 @@ from setu_spark.operators.dedup import (
     minhash_signatures,
     simhash_column,
 )
+from tests.conftest import uncoalesced
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs far away "
@@ -194,59 +195,49 @@ def test_minhash_estimates_track_true_jaccard(spark):
     assert mean_err < 0.12, mean_err
 
 
-def test_connected_components_planted_clusters(spark):
-    """Min-label propagation over a path, a triangle, and an isolated
+def test_connected_components_planted_clusters(spark, cc_log):
+    """Connected components over a path, a triangle, and an isolated
     pair — including a long path (worst case for propagation rounds)."""
-    from setu_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        # path 1-2-3-4-5, triangle 10-11-12, pair 20-21
-        [(1, 2), (2, 3), (3, 4), (4, 5),
-         (10, 11), (11, 12), (10, 12),
-         (20, 21)],
-        ["id_a", "id_b"],
-    )
+    # path 1-2-3-4-5, triangle 10-11-12, pair 20-21
+    rows = [(1, 2), (2, 3), (3, 4), (4, 5),
+            (10, 11), (11, 12), (10, 12),
+            (20, 21)]
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                 10: 10, 11: 10, 12: 10,
                 20: 20, 21: 20}
-    # both execution paths must produce identical labels: the default
-    # (small graph → driver-local union-find) and the distributed
-    # min-label loop (forced with local_edge_bound=0)
-    got_local = {
-        r.doc_id: r.component
-        for r in connected_components(pairs).collect()
-    }
-    got_dist = {
-        r.doc_id: r.component
-        for r in connected_components(pairs, local_edge_bound=0).collect()
-    }
-    assert got_local == expected
-    assert got_dist == expected
+    for got in _cc_labels_both_paths(spark, cc_log, rows):
+        assert got == expected
 
 
-def _cc_labels_both_paths(spark, rows):
-    """connected_components labels of ``rows`` on the union-find
-    dispatch and on the forced-distributed loop (which dedups off the
-    cache first)."""
+def _cc_labels_both_paths(spark, cc_log, rows):
+    """connected_components labels of ``rows`` from the default session
+    (AQE coalesces the tiny graph to one forest partition, so the
+    kernel's roots are final) and with the session's 8 shuffle
+    partitions kept (the distributed loop finishes the star forest)."""
     from setu_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    return [
-        {
+
+    def labels():
+        return {
             r.doc_id: r.component
-            for r in connected_components(
-                pairs, local_edge_bound=bound
-            ).collect()
+            for r in connected_components(pairs).collect()
         }
-        for bound in (len(rows), 0)
-    ]
+
+    one = labels()
+    assert cc_log().partitions == 1 and cc_log().rounds == 0
+    with uncoalesced(spark):
+        several = labels()
+    assert cc_log().partitions > 1 and cc_log().rounds > 0
+    return [one, several]
 
 
-def test_cc_pairs_canonical_matches_default(spark):
+def test_cc_pairs_canonical_matches_default(spark, cc_log):
     """connected_components takes pairs in either orientation and with
     self-loops: a canonical pair set (distinct rows, id_a < id_b, as
     lsh_candidate_pairs emits) must label identically to the same graph
-    given mirrored and with self-loops, on both execution paths."""
+    given mirrored and with self-loops, at one forest partition and at
+    several."""
     canonical = [(1, 2), (2, 3), (3, 4), (4, 5),
                  (10, 11), (10, 12), (11, 12),
                  (20, 21), (30, 30)]
@@ -257,15 +248,15 @@ def test_cc_pairs_canonical_matches_default(spark):
             10: 10, 11: 10, 12: 10,
             20: 20, 21: 20, 30: 30}
     for rows in (canonical, mixed):
-        for got in _cc_labels_both_paths(spark, rows):
+        for got in _cc_labels_both_paths(spark, cc_log, rows):
             assert got == want, rows
 
 
-def test_cc_duplicate_edges_match_unique(spark):
+def test_cc_duplicate_edges_match_unique(spark, cc_log):
     """The funnel feeds connected_components the RAW banded pairs — one
     row per shared band — so repeated edges (also mirrored repeats)
-    must label identically to the distinct edge set, on both execution
-    paths."""
+    must label identically to the distinct edge set, at one forest
+    partition and at several."""
     uniq = [(1, 2), (2, 3), (10, 11), (20, 21)]
     dup = uniq + [
         (1, 2), (1, 2), (10, 11),  # banded repeats
@@ -273,19 +264,73 @@ def test_cc_duplicate_edges_match_unique(spark):
     ]
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
     for rows in (uniq, dup):
-        for got in _cc_labels_both_paths(spark, rows):
+        for got in _cc_labels_both_paths(spark, cc_log, rows):
             assert got == want, rows
 
 
 def test_connected_components_empty_graph(spark):
     """Zero candidate pairs (tiny or all-unique corpora) must yield an
-    empty labeling on both execution paths, not a schema error from the
-    local path's empty createDataFrame."""
+    empty labeling, whether the empty forest has one partition or
+    several."""
     from setu_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(pairs).count() == 0
-    assert connected_components(pairs, local_edge_bound=0).count() == 0
+    with uncoalesced(spark):
+        assert connected_components(pairs).count() == 0
+
+
+def test_min_roots_permuted_chain():
+    """The forest kernel's numpy core on a 200,001-node chain with
+    permuted ids: one component labelled with the minimum id, well
+    inside 10 s. Hook + full pointer jumping needs 11 iterations
+    (~40 ms) here; a min-label core with one jump per iteration labels
+    the chain right too, but needs O(diameter) iterations (1-2 min)."""
+    import time
+
+    import numpy as np
+
+    from setu_spark.operators.dedup import _min_roots
+
+    ids = np.random.default_rng(7).permutation(200_001).astype(np.int64)
+    ids = ids * 3 + 5
+    t0 = time.perf_counter()
+    nodes, roots = _min_roots(ids[:-1], ids[1:])
+    assert time.perf_counter() - t0 < 10
+    assert np.array_equal(nodes, np.sort(ids))
+    assert set(roots.tolist()) == {int(ids.min())}
+
+
+def test_min_roots_matches_union_find():
+    """The forest kernel's numpy core against a plain union-find (union
+    by min, so every root is its set's minimum) on random multigraphs
+    with self-loops, repeated edges and many components."""
+    import numpy as np
+
+    from setu_spark.operators.dedup import _min_roots
+
+    def union_find(edges):
+        parent = {}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for u, v in edges:
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+        return {n: find(n) for n in parent}
+
+    rng = np.random.default_rng(11)
+    for n_nodes, n_edges in ((5, 3), (300, 150), (2000, 1900)):
+        u, v = rng.integers(0, n_nodes, (2, n_edges)) * 7 - 50
+        nodes, roots = _min_roots(u, v)
+        assert dict(zip(nodes.tolist(), roots.tolist())) == union_find(
+            zip(u.tolist(), v.tolist())
+        )
 
 
 def test_dedup_removed_docs_on_planted_dupes(spark):
@@ -384,9 +429,9 @@ def test_levenshtein_engine_parity_and_codepoint_semantics(spark, duck):
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """A chain longer than max_iterations hops must raise (round-4
-    ADVICE), not return partial labels that mismatch the exact
-    transitive-closure oracle."""
+    """A chain longer than max_iterations hops must raise, not return
+    partial labels that mismatch the exact transitive-closure
+    oracle."""
     import pytest as _pytest
 
     from setu_spark.operators.dedup import connected_components
@@ -394,18 +439,17 @@ def test_connected_components_nonconvergence_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], ["id_a", "id_b"]
     )
-    # force the distributed loop: the union-find fast path has no
+    # several forest partitions: the one-partition path has no
     # iteration count to exhaust
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=2, local_edge_bound=0)
-    # and with room to converge, the whole chain is one component
-    labels = connected_components(
-        chain, max_iterations=15, local_edge_bound=0
-    ).collect()
+    with uncoalesced(spark):
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iterations=2)
+        # and with room to converge, the whole chain is one component
+        labels = connected_components(chain, max_iterations=15).collect()
     assert {r.component for r in labels} == {0}
 
 
-def test_connected_components_pointer_jump_depth(spark):
+def test_connected_components_pointer_jump_depth(spark, cc_log):
     """Pointer jumping makes rounds O(log diameter): a 128-hop chain
     must converge well inside 10 rounds (the plain 1-hop loop needs
     128), and still label every node with the chain's min id. Also
@@ -416,12 +460,11 @@ def test_connected_components_pointer_jump_depth(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(128)], ["id_a", "id_b"]
     )
-    labels = dd.connected_components(
-        chain, max_iterations=10, local_edge_bound=0
-    ).collect()
+    with uncoalesced(spark):
+        labels = dd.connected_components(chain, max_iterations=10).collect()
     assert {r.component for r in labels} == {0}
     assert len(labels) == 129
-    assert 0 < dd.LAST_CC_ROUNDS <= 10
+    assert 0 < cc_log().rounds <= 10
 
     # mirrored orientation: same labels
     both = chain.union(
@@ -429,9 +472,8 @@ def test_connected_components_pointer_jump_depth(spark):
             chain.id_b.alias("id_a"), chain.id_a.alias("id_b")
         )
     )
-    labels2 = dd.connected_components(
-        both, max_iterations=10, local_edge_bound=0
-    ).collect()
+    with uncoalesced(spark):
+        labels2 = dd.connected_components(both, max_iterations=10).collect()
     assert {r.component for r in labels2} == {0}
     assert len(labels2) == 129
 

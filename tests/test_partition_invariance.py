@@ -98,6 +98,12 @@ AQE_SET = [
     "q127_classifier_quality_filter",
     "q128_source_kl_divergence",
     "q130_bpe_merge_candidates",
+    # connected components: with AQE on, the edge shuffle coalesces to
+    # one forest partition and the kernel's roots are final; with it
+    # off, the forest keeps every shuffle partition and the distributed
+    # loop finishes it
+    "q56_dedup_components",
+    "q144_leak_free_split",
 ]
 
 
