@@ -788,20 +788,29 @@ def _star_forest(batches):
         yield pd.DataFrame({"doc_id": nodes, "component": roots})
 
 
-def _min_label_loop(forest: DataFrame, max_iterations: int):
-    """The distributed finish over a multi-partition star forest:
-    ``(labels, rounds)``. Labels start at each node's least root; each
-    round is the 1-hop min-propagation (edge join + min-agg) plus a
-    POINTER-JUMP (labels re-labeled through themselves, one self-join)
-    that roughly doubles a label's reach per round on sorted-id chains:
-    14 rounds on a single diameter-9999 chain the 1-hop loop could never
-    finish inside any sane iteration cap. The jump preserves the
-    invariant "label(n) is the id of some node in n's component, ≤ n",
-    and convergence is still detected on the 1-hop step alone: at a
-    1-hop fixpoint labels are constant per component (any edge with
-    unequal labels would change one side), so the jump is also a no-op
-    there. ``localCheckpoint`` cuts lineage each round (iterative
-    DataFrame plans otherwise grow exponentially)."""
+def _hook_jump_loop(forest: DataFrame, max_iterations: int):
+    """Finish a multi-partition star forest: ``(labels, rounds)``.
+
+    The state is a parent pointer ``f``, seeded with each node's least
+    root. With ``m(n)`` the least pointer of n's neighbours, a round
+    lowers ``f(n)`` to ``m(n)`` (min-label) and ``f(f(n))`` to ``m(n)``
+    (FastSV's stochastic hooking, Zhang, Azad & Hu, SIAM PP 2020: n's
+    whole tree hooks under the smaller one next to it), and the next
+    round starts with one jump, ``f ← f∘f``. Min-label + jump alone is
+    O(log d) rounds only on chains whose ids are sorted along them and
+    O(d) on permuted ones, the normal shape of LSH chains; the hook
+    makes both O(log n) (numpy, 8-partition seed: 6 rounds on a
+    251-node permuted chain and 15 on a 200,001-node one, where
+    min-label + jump needs 154 and thousands; 14 on a sorted
+    20,001-node chain, as before). Pointers only decrease and stay
+    inside their component, so a round that lowers none is the
+    fixpoint: ``f ≤ m`` equates the pointers across every edge.
+
+    One checkpoint a round — the hooked pointers, whose projection
+    carries the change flag — keeps lineage one round deep. Every join
+    is hinted to sort-merge: a checkpoint keeps the size estimate of
+    the plan it cut (the edge count's), and broadcasts planned from it
+    ran a 10M-edge graph out of heap."""
     # a star edge (root, node) is canonical (root < node); distinct drops
     # the copies that partitions sharing a node emit, and the flipped
     # copy is disjoint from it: no second distinct shuffle to symmetrize
@@ -813,64 +822,44 @@ def _min_label_loop(forest: DataFrame, max_iterations: int):
     edges = ded.union(
         ded.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
-    labels = forest.groupBy("doc_id").agg(
-        F.min("component").alias("component")
-    )
+    typ = forest.schema["doc_id"].dataType
+    par = forest.groupBy("doc_id").agg(F.min("component").alias("f"))
     for rounds in range(1, max_iterations + 1):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("doc_id", "v").withColumnRenamed(
-                    "component", "v_comp"
-                ),
-                "v",
-            )
-            .groupBy(F.col("u").alias("doc_id"))
-            .agg(F.min("v_comp").alias("neighbor_comp"))
+        m = edges.join(
+            par.select(F.col("doc_id").alias("v"), F.col("f").alias("fv"))
+            .hint("merge"), "v",
+        ).groupBy(F.col("u").alias("doc_id")).agg(F.min("fv").alias("m"))
+        # per node its own candidates (carrying the old pointer) and its
+        # hook onto its parent; least/min skip the NULL m of a node
+        # whose only edge is a self-loop
+        own = F.struct(
+            F.col("doc_id").alias("n"),
+            F.least("f", "m").alias("c"),
+            F.col("f").alias("was"),
         )
-        # convergence flag computed IN the update projection (a label
-        # only ever decreases, so changed ⇔ neighbor min < current) —
-        # the check is then a scan of the checkpoint we just wrote, not
-        # a second labels join per round
-        updated = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("component"),
-                F.coalesce("neighbor_comp", F.col("component")),
-            ).alias("component"),
-            (
-                F.coalesce("neighbor_comp", F.col("component"))
-                < F.col("component")
-            ).alias("chg"),
+        up = F.struct(
+            F.col("f").alias("n"),
+            F.col("m").alias("c"),
+            F.lit(None).cast(typ).alias("was"),
         )
-        # pointer jump: re-label each node through its label's own
-        # (this round's) label — label(n) ← label(label(n)). Every
-        # label value is a node id present in `updated`, so the left
-        # join always hits; coalesce guards the invariant anyway.
-        jumped = (
-            updated.join(
-                updated.select(
-                    F.col("doc_id").alias("component"),
-                    F.col("component").alias("comp2"),
-                ),
-                "component",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("comp2", F.col("component")).alias("component"),
-                "chg",
-            )
+        hooked = (
+            par.join(m.hint("merge"), "doc_id", "left")
+            .select(F.explode(F.array(own, up)).alias("h"))
+            .groupBy(F.col("h.n").alias("doc_id"))
+            .agg(F.min("h.c").alias("c"), F.min("h.was").alias("was"))
+            .select("doc_id", "c", (F.col("c") < F.col("was")).alias("chg"))
             .localCheckpoint()
         )
-        labels = jumped.select("doc_id", "component")
-        if jumped.filter("chg").limit(1).count() == 0:
-            return labels, rounds
-    # Exiting by exhaustion means non-converged labels — which would
-    # silently mismatch the exact transitive-closure oracle. A
-    # duplicate chain longer than max_iterations hops is a sign the
-    # candidate graph is pathological (e.g. LSH banding misconfigured
-    # into one giant component); fail loudly instead of returning
-    # partial components.
+        if hooked.filter("chg").limit(1).count() == 0:
+            return hooked.select("doc_id", F.col("c").alias("component")), rounds
+        par = hooked.join(
+            hooked.select(F.col("doc_id").alias("c"), F.col("c").alias("f"))
+            .hint("merge"), "c",
+        ).select("doc_id", "f")
+    # non-converged labels would silently mismatch the exact
+    # transitive-closure oracle; a graph that needs more rounds is
+    # pathological (e.g. LSH banding misconfigured into one giant
+    # component), so fail loudly
     raise RuntimeError(
         f"connected_components did not converge within "
         f"{max_iterations} iterations — labels still changing; "
@@ -899,13 +888,19 @@ def connected_components(
     ``u`` and one ``mapInPandas`` kernel per partition solves that
     partition's edges in numpy (:func:`_star_forest`), emitting a forest
     of stars ``(node, local min root)``, which ``localCheckpoint``
-    materializes. With ONE forest partition, AQE measured the shuffle
-    below its advisory size and coalesced it, so the kernel saw every
-    edge and its roots are final: the checkpoint is the only eager
-    action, and the forest comes back broadcast-hinted (without the
-    hint its estimated size flips the funnel's join-back to a
-    sort-merge join at sf0.1). With several, :func:`_min_label_loop`
-    finishes on the star edges.
+    materializes. With ONE forest partition, AQE coalesced the whole
+    shuffle into one, so the kernel saw every edge and its roots are
+    final: the checkpoint is the only eager action, and the forest
+    comes back broadcast-hinted (without the hint its estimated size
+    flips the funnel's join-back to a sort-merge join at sf0.1). With
+    several, :func:`_hook_jump_loop` finishes on the star edges.
+
+    The AQE conf, not this function, bounds that broadcast: only a
+    shuffle below AQE's coalescing target ends in one partition. Under
+    Spark's default ``coalescePartitions.parallelismFirst=true`` the
+    target is the 1 MB ``minPartitionSize`` (tens of thousands of
+    edges); with it off, ``advisoryPartitionSizeInBytes`` (64 MB by
+    default, 256 MB in :func:`setu_spark.session.cluster_conf`).
 
     Each call logs one :data:`DISPATCH_LOG` record whose ``partitions``
     and ``rounds`` attributes carry the forest's partition count and
@@ -929,7 +924,7 @@ def connected_components(
     labels, rounds = (
         (F.broadcast(forest), 0)
         if partitions <= 1
-        else _min_label_loop(forest, max_iterations)
+        else _hook_jump_loop(forest, max_iterations)
     )
     DISPATCH_LOG.info(
         "connected_components: %d forest partitions, %d rounds",

@@ -34,6 +34,11 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
 #: small SF and splits skewed partitions at large SF.
 DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
+    # coalescePartitions.parallelismFirst stays at Spark's default (true):
+    # dedup.connected_components broadcasts its star forest when AQE
+    # coalesced the edge shuffle to one partition, which this keeps to
+    # the 1 MB minPartitionSize; with it false the bound becomes the
+    # advisory size (64 MB by default, 256 MB in cluster_conf)
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
@@ -126,6 +131,8 @@ def cluster_conf(
         "spark.executor.memoryOverhead": "4g",
         # scan + shuffle partition grain
         "spark.sql.files.maxPartitionBytes": str(target_partition_bytes),
+        # (with parallelismFirst=false this also bounds the star forest
+        # connected_components broadcasts; see DEFAULT_CONF)
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
             target_partition_bytes
         ),

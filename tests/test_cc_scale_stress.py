@@ -1,11 +1,11 @@
 """Distributed CC one decade up.
 
-The pointer-jump loop has committed evidence at 1M edges / 200k
-length-5 chains (3 rounds / 18.8s, PERF.md) and on a single
-diameter-9999 chain (14 rounds — the O(log d) regime; the 1-hop loop
-could never finish inside any sane cap). This suite probes one decade
-up, where a regression to O(diameter) rounds, or a large graph that
-never leaves one forest partition, actually SHOWS:
+The distributed loop has committed evidence at 1M edges / 200k
+length-5 chains (3 rounds, PERF.md) and on a single diameter-9999
+chain (14 rounds — the O(log d) regime; the 1-hop loop could never
+finish inside any sane cap). This suite probes one decade up, where a
+regression to O(diameter) rounds, or a large graph that never leaves
+one forest partition, actually SHOWS:
 
   * 10M edges / 2M length-5 chains / 12M nodes — AQE must keep the
     edge shuffle at several forest partitions (so the per-partition
@@ -18,8 +18,11 @@ never leaves one forest partition, actually SHOWS:
     partitions — one doubling past the committed 9999-chain probe: the
     jump regime needs ~+1 round (≤16), while an O(diameter) regression
     needs 20000 rounds and trips the max_iterations raise long before.
+  * the same chain with its ids permuted, the shape LSH chains have:
+    pointer jumping alone gains nothing there (thousands of rounds);
+    the loop's tree hooking keeps it at ≤16.
 
-Marked slow: the two graphs cost ~2-4 min together on local[32]; the
+Marked slow: the graphs cost a few minutes together on 4 cores; the
 suite runs under SETU_SLOW=1 only. Wall/rounds land in PERF.md.
 """
 
@@ -114,5 +117,31 @@ def test_diameter_twenty_thousand_chain(spark, cc_log):
     assert one[0].n == n + 1 and one[0].lo == 0 == one[0].component
     # one doubling past the committed diameter-9999 probe (14 rounds):
     # the O(log d) regime needs ~15; an O(d) regression needs 20000
+    assert cc_log().partitions > 1, cc_log().partitions
+    assert cc_log().rounds <= 16, cc_log().rounds
+
+
+def test_permuted_chain_twenty_thousand(spark, cc_log):
+    import numpy as np
+
+    import setu_spark.operators.dedup as dd
+
+    ids = np.random.default_rng(20_000).permutation(20_001).astype(int)
+    chain = spark.createDataFrame(
+        list(zip(ids[:-1].tolist(), ids[1:].tolist())), "id_a long, id_b long"
+    )
+    t0 = time.perf_counter()
+    with uncoalesced(spark):
+        labels = dd.connected_components(chain, max_iterations=25)
+    one = labels.groupBy("component").agg(
+        F.count("*").alias("n"), F.min("doc_id").alias("lo")
+    ).collect()
+    wall = time.perf_counter() - t0
+    print(
+        f"\n[cc-stress] permuted 20,001-node chain: {cc_log().rounds} "
+        f"rounds, {wall:.1f}s"
+    )
+    assert len(one) == 1
+    assert one[0].n == 20_001 and one[0].lo == 0 == one[0].component
     assert cc_log().partitions > 1, cc_log().partitions
     assert cc_log().rounds <= 16, cc_log().rounds

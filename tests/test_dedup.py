@@ -478,6 +478,29 @@ def test_connected_components_pointer_jump_depth(spark, cc_log):
     assert len(labels2) == 129
 
 
+def test_connected_components_permuted_chain(spark, cc_log):
+    """A near-duplicate chain whose ids are NOT sorted along it (the
+    normal shape of LSH chains) must converge at the default
+    max_iterations with several forest partitions: the distributed
+    loop hooks whole trees, so a 251-node permuted chain needs ~7
+    rounds. Min-label + one pointer jump per round needs O(diameter)
+    rounds here (~150) and raises."""
+    import numpy as np
+
+    from setu_spark.operators.dedup import connected_components
+
+    ids = np.random.default_rng(5).permutation(251).astype(int) * 3 + 7
+    chain = spark.createDataFrame(
+        list(zip(ids[:-1].tolist(), ids[1:].tolist())), "id_a long, id_b long"
+    )
+    with uncoalesced(spark):
+        labels = connected_components(chain).collect()
+    assert cc_log().partitions > 1
+    assert 0 < cc_log().rounds <= 10, cc_log().rounds
+    assert len(labels) == 251
+    assert {r.component for r in labels} == {int(ids.min())}
+
+
 def test_dedup_impact_audit_planted_clusters(spark):
     """q125's histogram on planted exact duplicates: a 3-cluster, a
     2-cluster, and a singleton roll up with exact removed-char sums
