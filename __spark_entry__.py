@@ -49,66 +49,61 @@ SF0001 = "/root/testdata/sf0.001"
 #: The driver's correctness harness checks roughly the FIRST 50
 #: entries of the returned maps, so this list pins the window
 #: explicitly (everything else follows in registration order).
-#: ROUND 14 window: the committed ROTATION.md round-14 block — the 49
-#: queries whose last green driver row is r12 and which hit the
-#: 3-round staleness ceiling this round, plus the first free slot
-#: taken by q56_dedup_components (fronted via tools/staleness.py
-#: CHANGED: the funnel restructure is this round's largest engine
-#: change, and q56 is its family representative; the remaining
-#: round-14-changed queries either already sit in this window's
-#: overdue block — q24/q89/q123/q127/q140/q141(via q151's sweep
-#: slot)/q151 — or overflow to round 15 per the rotation design).
+#: ROUND 15 window: the committed ROTATION.md round-15 block — the
+#: queries the round-14 window left out, ceiling-bound ones first, with
+#: the round-14 changes that overflowed that window (q125, q139-q141,
+#: q144) among them.
 _FRONT = (
-    "q06_forecast_revenue",
-    "q102_quality_tiers",
-    "q104_compression_ratio",
-    "q114_bigram_logprob",
-    "q115_quality_sketch_gate",
-    "q116_sentence_explode",
-    "q117_partitioned_sink_roundtrip",
-    "q118_orc_sink_roundtrip",
-    "q119_jsonl_scan_roundtrip",
-    "q120_csv_scan_roundtrip",
-    "q121_heavy_hitters",
-    "q122_incremental_admission",
-    "q123_semantic_dedup",
-    "q124_dsir_importance",
-    "q126_margin_pair_mining",
-    "q127_classifier_quality_filter",
-    "q128_source_kl_divergence",
-    "q129_sequence_chunking",
-    "q130_bpe_merge_candidates",
-    "q131_ann_recall_audit",
-    "q133_lsh_precision_audit",
-    "q134_trailing_range_revenue",
-    "q135_unpivot_doc_metrics",
-    "q136_order_distribution_stats",
-    "q143_ivf_cell_balance",
-    "q151_joint_dedup_agreement",
-    "q152_ann_admission",
-    "q24_price_math_profile",
-    "q25_name_normalization",
-    "q28_approx_distinct_parts",
-    "q35_token_counts",
-    "q36_rolling_fingerprints",
-    "q41_char_ngram_repetition",
-    "q45_lid_heuristic",
-    "q46_code_removal",
-    "q47_multi_n_repetition",
-    "q50_exact_dedup_survivors",
-    "q52_minhash_lsh_pairs",
-    "q55_embedding_neardup",
-    "q57_simhash_neardup_pairs",
-    "q70_hourly_event_stats",
-    "q80_clean_pipeline",
-    "q83_curation_pipeline",
-    "q84_approx_quantiles",
-    "q85_kmeans_clusters",
-    "q89_bloom_decontamination",
-    "q93_cross_corpus_neardup",
-    "q97_pii_redaction",
-    "q99_gopher_quality_rules",
-    "q56_dedup_components",
+    "q100_dataset_card",
+    "q101_media_chunk_windows",
+    "q108_editdist_verify",
+    "q110_source_mixture_weights",
+    "q125_dedup_impact_audit",
+    "q137_props_schema_parse",
+    "q138_margin_pair_mining_ann",
+    "q139_bpe_merge_iterations",
+    "q140_margin_ann_recall_audit",
+    "q141_bpe_compression_curve",
+    "q142_embedding_quant_audit",
+    "q18_order_price_bands",
+    "q21_price_percentiles",
+    "q22_part_name_drift",
+    "q23_monthly_seasonality",
+    "q26_conditional_aggregates",
+    "q29_token_budget_sample",
+    "q34_doc_fingerprint",
+    "q37_fingerprint_containment",
+    "q38_representative_doc_per_group",
+    "q39_tfidf_top_terms",
+    "q40_reassembly_roundtrip",
+    "q42_word_ngram_repetition",
+    "q43_script_detection",
+    "q44_flagged_word_counts",
+    "q48_repetition_flag_filter",
+    "q49_wordlist_flagged_counts",
+    "q51_minhash_signatures",
+    "q53_token_jaccard_pairs",
+    "q54_simhash",
+    "q58_lsh_then_exact_jaccard",
+    "q59_dedup_removed_docs",
+    "q60_cosine_topk",
+    "q61_label_centroids",
+    "q62_ann_lsh_buckets",
+    "q64_decontamination",
+    "q65_keyword_phrase_hits",
+    "q66_flashtext_keyword_dist",
+    "q67_normalize_indic",
+    "q69_junk_document_flags",
+    "q81_flag_filter_survivors",
+    "q82_lid_predictions",
+    "q86_weighted_sample",
+    "q87_lang_balanced_sample",
+    "q90_media_decode_stats",
+    "q91_video_frame_offsets",
+    "q92_media_bytes_by_kind",
+    "q94_sequence_packing",
+    "q98_hash_split",
+    "q144_leak_free_split",
 )
 
 

@@ -34,7 +34,6 @@ bit-identical to the DuckDB oracle.
 from __future__ import annotations
 
 import functools
-import logging
 import operator
 
 import pandas as pd
@@ -46,7 +45,11 @@ from setu_spark.functions.hashes import hash64, hash64_sql
 from setu_spark.caching import scoped_cache
 from setu_spark.operators.guards import pair_budget_gate
 from setu_spark.registry import register
-from setu_spark.sources.io import load_table, load_table_parallel
+from setu_spark.sources.io import (
+    DISPATCH_LOG,
+    load_table,
+    load_table_parallel,
+)
 
 NUM_PERM = 8
 ROWS_PER_BAND = 2
@@ -216,11 +219,13 @@ def band_table(
     bucketing key. One output row per band per doc.
 
     Docs with NULL signatures (shorter than the shingle width — empty after
-    cleaning, say) are excluded: ``concat_ws`` skips NULLs, so they would
+    cleaning, say) get no rows: ``concat_ws`` skips NULLs, so they would
     all collide in the md5('') bucket and generate O(n²) false candidate
     pairs. A doc with no shingles has no similarity evidence; it can't be a
-    fuzzy duplicate of anything."""
-    sig = sig.filter(F.col("m0").isNotNull())
+    fuzzy duplicate of anything. The guard sits inside the explode
+    (``explode(when(m0 IS NOT NULL, array(bands)))``) rather than in a
+    filter: Catalyst pushes a filter on a pandas-UDF output field below
+    the UDF's projection, which evaluates the signature kernel twice."""
     bands = []
     for b in range(num_perm // rows_per_band):
         cols = [F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -230,9 +235,12 @@ def band_table(
                 F.md5(F.concat_ws(",", *cols)).alias("band_hash"),
             )
         )
-    return sig.select(
-        id_col, F.explode(F.array(*bands)).alias("bh")
-    ).select(id_col, F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
+    guarded = F.when(F.col("m0").isNotNull(), F.array(*bands))
+    return sig.select(id_col, F.explode(guarded).alias("bh")).select(
+        id_col,
+        F.col("bh.band").alias("band"),
+        F.col("bh.band_hash").alias("band_hash"),
+    )
 
 
 def lsh_candidate_pairs(
@@ -241,31 +249,35 @@ def lsh_candidate_pairs(
     distinct: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing ≥1 LSH band bucket.
-    The self-join keys on (band, band_hash): Spark hash-partitions both
-    sides identically, so each bucket's pairs are generated locally.
 
-    ``distinct=False`` skips the pair-dedup exchange and
-    returns the raw banded pairs — one row per SHARED BAND, so a pair
-    colliding in k bands appears k (≤ ``num_perm/rows_per_band``)
-    times. For pair-LISTING consumers (q52 and its oracle) distinct is
+    One shuffle groups the band rows by (band, band_hash) into each
+    bucket's sorted member list; ``posexplode`` then pairs member i with
+    every later member (``explode(slice(ids, i + 2, n))``), keeping
+    ``id_a < id_b``. The pairs of a hot bucket stream out of the two
+    generators; no O(m²) array is built. The signature table feeds one
+    plan branch, so its kernel runs once, where a self-join evaluates it
+    once per join side.
+
+    ``distinct=False`` skips the pair-dedup exchange and returns the raw
+    banded pairs — one row per SHARED BAND, so a pair colliding in k
+    bands appears k (≤ ``num_perm/rows_per_band``) times, and a doc id
+    repeated in ``sig`` repeats its pairs as a self-join on the bucket
+    would. For pair-LISTING consumers (q52 and its oracle) distinct is
     the semantics; for a consumer that tolerates duplicate edges —
-    connected components' min-label/union-find does by algebra — the
-    distinct is a pure extra shuffle stage on the funnel's eager
-    dispatch path."""
-    bands = band_table(sig, id_col, num_perm, rows_per_band)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    connected components' hooks and labels do by algebra — the distinct
+    is a pure extra shuffle stage."""
+    buckets = (
+        band_table(sig, id_col, num_perm, rows_per_band)
+        .groupBy("band", "band_hash")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+    )
     out = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        buckets.select("ids", F.posexplode("ids").alias("i", "id_a"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            "id_a",
+            F.explode(F.expr("slice(ids, i + 2, size(ids))")).alias("id_b"),
         )
+        .filter(F.col("id_a") < F.col("id_b"))
     )
     return out.distinct() if distinct else out
 
@@ -421,8 +433,9 @@ def q52_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle on band hash) → in-bucket pair generation → signature
     verify (broadcast-friendly joins)."""
     docs = load_table(spark, sf_dir, "documents")
-    # the signature table feeds four plan branches (two band sides, two
-    # verify joins) — cache it so signatures are computed once
+    # the signature table feeds four plan branches (the bucket grouping,
+    # the budget gate's bands, two verify joins) — cache it so
+    # signatures are computed once
     sig = scoped_cache("q52_minhash_lsh_pairs", minhash_signatures(docs))
     # pair-listing budget: the pair LIST is
     # quadratic in copy count by semantics; fail loudly instead of
@@ -737,11 +750,6 @@ def simhash_column(
 
 
 # ------------------------------------------------------- survivor selection
-
-#: One record per run-time choice an operator makes from the data it
-#: sees, with the inputs of that choice as record attributes.
-DISPATCH_LOG = logging.getLogger("setu_spark.dispatch")
-
 
 def _min_roots(u, v):
     """Connected components of the edge list ``(u[i], v[i])`` in numpy:
@@ -1397,8 +1405,8 @@ def q58_lsh_then_exact_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive exact measure touches |candidates| pairs, and candidates are
     O(docs × bands) by construction."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = scoped_cache("q58_lsh_then_exact_jaccard", minhash_signatures(docs))
-    cand = lsh_candidate_pairs(sig)
+    # uncached: the signatures feed one plan branch, the bucket grouping
+    cand = lsh_candidate_pairs(minhash_signatures(docs))
     toks = docs.select(
         "doc_id", distinct_tokens().alias("ts")
     )

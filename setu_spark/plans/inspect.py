@@ -10,10 +10,12 @@ hoping — the `.explain`-and-iterate loop from SURVEY §4, made executable.
 from __future__ import annotations
 
 import io
+import itertools
 import re
 from contextlib import redirect_stdout
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -442,6 +444,29 @@ def duplicated_python_udf_calls(df: DataFrame) -> list[str]:
         calls = _UDF_CALL.findall(fragment)
         out.update(c for c in calls if calls.count(c) > 1)
     return sorted(out)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def construct_jobs(
+    spark: SparkSession, build: Callable[[], DataFrame]
+) -> tuple[DataFrame, int]:
+    """``build()`` run under a job group of its own: returns the frame it
+    builds and the number of Spark jobs that building started (schema
+    inference, eager probes, checkpoints). The listener bus drains
+    before the count, so a job whose start event is still queued
+    counts."""
+    sc = spark.sparkContext
+    group = f"construct-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "construct")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def plan_fingerprint(df: DataFrame) -> dict:

@@ -9,10 +9,23 @@ filtered DataFrame written through the normal sink).
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    DataType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+#: One record per run-time choice an operator makes from the data it
+#: sees, with the inputs of that choice as record attributes.
+DISPATCH_LOG = logging.getLogger("setu_spark.dispatch")
 
 #: Driver-generated analytics tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -93,19 +106,157 @@ def configure_object_store(spark: SparkSession, scheme: str) -> dict[str, str]:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one testdata table (S2). Object-store sf_dirs
-    (``gs://bucket/sf100``, ``s3a://…``) get their connector conf applied
-    on first touch (S9) — the query code itself is storage-agnostic."""
+    """Parquet scan of one testdata table (S2), schema pinned from its
+    footer.
+
+    A bare ``spark.read.parquet`` infers the schema with a Spark job
+    (~0.1 s and one job a scan, the largest share of query-construction
+    jobs). Local tables instead read one parquet footer on the driver
+    with pyarrow (:func:`footer_schema`, well under a millisecond) and
+    pass the result as ``.schema(...)``, so building a query starts no
+    job. The footer is read on every call: nothing is memoized, so a
+    rewritten file is never read with a stale schema.
+
+    Object-store sf_dirs (``gs://bucket/sf100``, ``s3a://…``) get their
+    connector conf applied on first touch (S9) and keep Spark's
+    inference, since pyarrow has no filesystem for them here; so do
+    local tables whose footer holds a type :func:`footer_schema` does
+    not map. The query code itself is storage-agnostic."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     scheme = path_scheme(sf_dir)
     if scheme:
         configure_object_store(spark, scheme)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return spark.read.parquet(path)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
 ) -> dict[str, DataFrame]:
+    """:func:`load_table` for each of ``names``: one footer read per
+    table, no Spark job."""
     return {n: load_table(spark, sf_dir, n) for n in names}
+
+
+#: Footer key under which Spark's parquet writer stores the frame's own
+#: schema; Spark's reader prefers it to the parquet types when present.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _conf_true(spark: SparkSession, key: str) -> bool:
+    return str(spark.conf.get(key)).lower() == "true"
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file whose footer Spark's inference reads: the table itself,
+    or a directory's first visible file in path order. None for a
+    directory holding no files (partition subdirectories only)."""
+    if not os.path.isdir(path):
+        return path
+    parts = sorted(
+        f for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+        and os.path.isfile(os.path.join(path, f))
+    )
+    return os.path.join(path, parts[0]) if parts else None
+
+
+def _timestamp_type(spark: SparkSession, column) -> DataType | None:
+    """Spark's type for a top-level parquet timestamp column: from the
+    physical encoding, not pyarrow's reading of it (pyarrow reads INT96
+    and INT64 NANOS both as ``timestamp[ns]``)."""
+    if column is None:
+        return None
+    if column.physical_type == "INT96":
+        return TimestampType()
+    logical = json.loads(column.logical_type.to_json())
+    if logical.get("Type") != "Timestamp":
+        return None
+    if logical["timeUnit"] == "nanoseconds":
+        # without nanosAsLong Spark refuses the column: let it say so
+        if _conf_true(spark, "spark.sql.legacy.parquet.nanosAsLong"):
+            return LongType()
+        return None
+    if logical["isAdjustedToUTC"] or not _conf_true(
+        spark, "spark.sql.parquet.inferTimestampNTZ.enabled"
+    ):
+        return TimestampType()
+    return TimestampNTZType()
+
+
+def _mapped_alike(spark: SparkSession, typ) -> bool:
+    """True when ``from_arrow_type`` gives the type Spark's parquet
+    inference gives for this Arrow type, nested types included.
+    Timestamps below the top level, unsigned integers, durations, times
+    and the like are left to Spark."""
+    import pyarrow.types as pat
+
+    if pat.is_dictionary(typ):
+        return _mapped_alike(spark, typ.value_type)
+    if pat.is_list(typ) or pat.is_large_list(typ) or pat.is_fixed_size_list(typ):
+        return _mapped_alike(spark, typ.value_type)
+    if pat.is_map(typ):
+        return _mapped_alike(spark, typ.key_type) and _mapped_alike(
+            spark, typ.item_type
+        )
+    if pat.is_struct(typ):
+        return all(_mapped_alike(spark, f.type) for f in typ)
+    if pat.is_binary(typ) or pat.is_large_binary(typ):
+        return not _conf_true(spark, "spark.sql.parquet.binaryAsString")
+    return any(
+        check(typ) for check in (
+            pat.is_boolean, pat.is_int8, pat.is_int16, pat.is_int32,
+            pat.is_int64, pat.is_float32, pat.is_float64, pat.is_decimal128,
+            pat.is_string, pat.is_large_string, pat.is_date32,
+        )
+    )
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    local parquet footer on the driver, or None where only Spark's
+    inference can tell (a missing or unreadable file, a directory of
+    partition subdirectories, a type outside :func:`_mapped_alike`).
+
+    A footer written by Spark carries Spark's own schema, which its
+    reader prefers; any other footer maps through pyspark's
+    ``from_arrow_type``, with top-level timestamps derived from the
+    parquet encoding (:func:`_timestamp_type`): INT64 NANOS is
+    ``bigint`` under ``nanosAsLong``, INT96 is ``timestamp``, and a
+    timestamp not adjusted to UTC is ``timestamp_ntz`` under
+    ``inferTimestampNTZ``. Nullability is moot: Spark's reader makes
+    every field of a file source nullable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    file = _first_data_file(path)
+    if file is None:
+        return None
+    try:
+        meta = pq.read_metadata(file)
+    except (OSError, pa.ArrowException):
+        return None
+    stored = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored:
+        return StructType.fromJson(json.loads(stored))
+    columns = {
+        c.path: c for c in (meta.schema.column(i) for i in range(meta.num_columns))
+    }
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if pa.types.is_timestamp(f.type):
+            typ = _timestamp_type(spark, columns.get(f.name))
+        elif _mapped_alike(spark, f.type):
+            typ = from_arrow_type(f.type)
+        else:
+            typ = None
+        if typ is None:
+            return None
+        fields.append(StructField(f.name, typ))
+    return StructType(fields)
 
 
 def read_json_corpus(
@@ -238,16 +389,35 @@ def rebalance_small_scan(
     the fallback probes the planner via ``df.rdd.getNumPartitions()``,
     which was measured at ~120-175 ms of driver time PER CALL (it
     builds the full scan RDD) — real money inside a sub-second query,
-    hence the stat-based fast path."""
+    hence the stat-based fast path.
+
+    Each call logs one :data:`DISPATCH_LOG` record whose attributes
+    carry the inputs and the choice: ``input_bytes`` (None without the
+    stat), ``scan_partitions`` (None with it), ``split_bytes``,
+    ``parallelism`` and ``rebalance``."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    split = _session_split_bytes(spark)
     if input_bytes is not None:
-        if input_bytes < target * _session_split_bytes(spark):
-            return df.repartition(target)
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+        partitions = None
+        rebalance = input_bytes < target * split
+    else:
+        partitions = df.rdd.getNumPartitions()
+        rebalance = partitions < target
+    DISPATCH_LOG.info(
+        "rebalance_small_scan: %s (input %s bytes, scan partitions %s,"
+        " split %d bytes, parallelism %d)",
+        "repartition" if rebalance else "keep",
+        input_bytes, partitions, split, target,
+        extra={
+            "input_bytes": input_bytes,
+            "scan_partitions": partitions,
+            "split_bytes": split,
+            "parallelism": target,
+            "rebalance": rebalance,
+        },
+    )
+    return df.repartition(target) if rebalance else df
 
 
 #: Spark's DEFAULT parquet split size (spark.sql.files.maxPartitionBytes)

@@ -18,8 +18,9 @@ as a chunk-level DataFrame pipeline:
 Every filter is config-gated like the reference's flags (§1.4). The
 rejected rows are returned as a second DataFrame (the reference wrote them
 via a pyarrow side-writer inside mapPartitions, S8 — an anti-pattern at
-scale; two filtered DataFrames over one cached chunk table cost one extra
-narrow pass).
+scale). Nothing caches the chunk table: the kept and the rejected
+DataFrame each recompute the chunking and the chunk predicates, so a
+caller writing both pays that narrow pass twice.
 """
 
 from __future__ import annotations

@@ -3,6 +3,8 @@ near-duplicates, so these prove the machinery detects them when present)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from setu_spark.operators.dedup import (
@@ -14,7 +16,9 @@ from setu_spark.operators.dedup import (
     minhash_signatures,
     simhash_column,
 )
-from tests.conftest import uncoalesced
+from setu_spark.plans.inspect import duplicated_python_udf_calls, plan_string
+from setu_spark.sources.io import load_table
+from tests.conftest import SF_SMALL, uncoalesced
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs far away "
@@ -149,6 +153,74 @@ def test_null_signature_docs_generate_no_pairs(spark):
         (r.id_a, r.id_b) for r in lsh_candidate_pairs(sig).collect()
     }
     assert pairs == {(4, 5)}
+
+
+def _reference_pairs(sig, distinct):
+    """The bucket self-join ``lsh_candidate_pairs`` must agree with: every
+    two band rows sharing (band, band_hash), ids ordered."""
+    a, b = band_table(sig).alias("a"), band_table(sig).alias("b")
+    out = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_hash") == F.col("b.band_hash"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    return out.distinct() if distinct else out
+
+
+def _pair_multisets(sig, distinct):
+    return [
+        sorted(map(tuple, df.collect()))
+        for df in (
+            lsh_candidate_pairs(sig, distinct=distinct),
+            _reference_pairs(sig, distinct),
+        )
+    ]
+
+
+def test_lsh_pairs_evaluate_the_kernel_once(spark):
+    """The signature kernel runs in one ArrowEvalPython node per funnel:
+    the bucket grouping feeds one plan branch, and the NULL guard sits
+    inside the band explode, not in a filter Catalyst pushes below the
+    kernel's projection."""
+    sig = minhash_signatures(load_table(spark, SF_SMALL, "documents"))
+    pairs = lsh_candidate_pairs(sig, distinct=False)
+    assert plan_string(pairs, "simple").count("ArrowEvalPython") == 1
+    assert duplicated_python_udf_calls(band_table(sig)) == []
+
+
+def test_lsh_pairs_match_bucket_self_join(spark):
+    sig = minhash_signatures(
+        load_table(
+            spark, os.path.join(os.path.dirname(SF_SMALL), "sf0.01"),
+            "documents",
+        )
+    )
+    raw, want_raw = _pair_multisets(sig, distinct=False)
+    dist, want_dist = _pair_multisets(sig, distinct=True)
+    assert (len(raw), len(dist)) == (92, 25)
+    assert raw == want_raw and dist == want_dist
+
+
+def test_lsh_pairs_hot_bucket_and_repeated_id(spark):
+    """Forty identical texts fill one bucket per band: every ordered pair
+    once per band raw, once distinct. A doc id listed twice repeats its
+    pairs as the self-join does, and never pairs with itself."""
+    hot = [(i, BASE) for i in range(40)]
+    sig = minhash_signatures(
+        spark.createDataFrame(
+            hot + [(7, BASE), (100, NEAR_DUP), (101, "too short")],
+            ["doc_id", "text"],
+        )
+    )
+    raw, want_raw = _pair_multisets(sig, distinct=False)
+    dist, want_dist = _pair_multisets(sig, distinct=True)
+    assert raw == want_raw and dist == want_dist
+    assert all(a < b for a, b in dist)
+    assert raw.count((7, 8)) == 2 * 4 and raw.count((6, 7)) == 2 * 4
+    assert {(a, b) for a, b in dist if b < 40} == {
+        (a, b) for a in range(40) for b in range(a + 1, 40)
+    }
 
 
 def test_minhash_estimates_track_true_jaccard(spark):

@@ -320,22 +320,3 @@ def test_bpe_kernel_input_split_over_arrow_batches(spark):
     finally:
         spark.conf.set(key, old)
     assert got == want and len(want[0]) == BPE_ITERS
-
-
-def test_q141_construct_job_count(spark):
-    """Building q139 or q141 runs no merge round: the frame is lazy, so
-    the only Spark job allowed is ``load_table``'s parquet schema
-    inference. An eager collect or a cached segmentation shows up here
-    as extra jobs."""
-    sc = spark.sparkContext
-    for query in (q139_bpe_merge_iterations, q141_bpe_compression_curve):
-        group = f"{query.__name__}-construct-jobs"
-        spark.catalog.clearCache()
-        sc.setJobGroup(group, "construct")
-        try:
-            query(spark, SF_SMALL)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert jobs <= 1, (query.__name__, jobs)

@@ -17,6 +17,14 @@ for all 149 queries — every registry broadcast is hint-driven — so the
 sf0.1 section is an invariance witness; its live recompute is
 SETU_SLOW-gated while the cross-section equality check always runs.
 
+The sf0.001 section also pins ``construct_jobs``, the Spark jobs that
+building each query's frame starts (schema inference, eager probes,
+checkpoints), counted under a job group of its own
+(``plans.inspect.construct_jobs``). A new eager action then fails here
+instead of surfacing as construction time in a bench record. Only the
+plan fields are compared across sections: a job count may follow the
+data (the CC loop's rounds do).
+
 A diff here is not necessarily a bug. Update path after a REVIEWED
 plan change:  python tools/plan_audit.py --snapshot   and commit the
 ledger diff alongside the code change that caused it.
@@ -33,7 +41,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from setu_spark.plans.inspect import plan_fingerprint
+from setu_spark.plans.inspect import construct_jobs, plan_fingerprint
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LEDGER_PATH = os.path.join(ROOT, "PLAN_FINGERPRINTS.json")
@@ -85,12 +93,12 @@ def test_sections_agree_across_scale_factors(sections):
     149 agree today because every registry broadcast is hint-driven;
     a legitimate divergence must be reviewed and this test updated to
     carve it out explicitly."""
-    base = sections[FAST_SF]
+    base = {k: _plan_fields(v) for k, v in sections[FAST_SF].items()}
     for sf_dir, fingerprints in sections.items():
         diff = {
-            k: {"base": base.get(k), sf_dir: v}
+            k: {"base": base.get(k), sf_dir: _plan_fields(v)}
             for k, v in fingerprints.items()
-            if v != base.get(k)
+            if _plan_fields(v) != base.get(k)
         }
         assert not diff, (
             f"fingerprints diverge between {FAST_SF} and {sf_dir} — a "
@@ -98,11 +106,27 @@ def test_sections_agree_across_scale_factors(sections):
         )
 
 
+def _plan_fields(fingerprint: dict) -> dict:
+    return {k: v for k, v in fingerprint.items() if k != "construct_jobs"}
+
+
+def test_fast_section_pins_construct_jobs(sections):
+    missing = sorted(
+        k for k, v in sections[FAST_SF].items() if "construct_jobs" not in v
+    )
+    assert not missing, (
+        f"{FAST_SF} entries without construct_jobs: {missing}; {UPDATE_HINT}"
+    )
+
+
 def _live_diff(spark, pinned: dict, sf_dir: str) -> dict:
     drifted = {}
     for name, fn in sorted(entrymod.queries().items()):
         try:
-            now = plan_fingerprint(fn(spark, sf_dir))
+            df, jobs = construct_jobs(spark, lambda: fn(spark, sf_dir))
+            now = plan_fingerprint(df)
+            if "construct_jobs" in pinned.get(name, {}):
+                now["construct_jobs"] = jobs
         except Exception as exc:  # noqa: BLE001
             now = {"error": type(exc).__name__}
         finally:
@@ -113,9 +137,10 @@ def _live_diff(spark, pinned: dict, sf_dir: str) -> dict:
 
 
 def test_every_registered_plan_matches_its_fingerprint(spark, sections):
-    """The load-bearing diff: recompute every query's fingerprint at the
-    fast SF and compare. Reported all-at-once so one refactor that
-    moves five plans shows the full blast radius."""
+    """The load-bearing diff: recompute every query's fingerprint and
+    construction-job count at the fast SF and compare. Reported
+    all-at-once so one refactor that moves five plans shows the full
+    blast radius."""
     drifted = _live_diff(spark, sections[FAST_SF], FAST_SF)
     assert not drifted, (
         f"{len(drifted)} plan fingerprints drifted from the committed "

@@ -7,6 +7,8 @@ string — cheap, deterministic, no data needed beyond the scan."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -417,6 +419,32 @@ def test_rebalance_split_size_tracks_session_conf(spark):
         )
     finally:
         spark.conf.set(key, old)
+
+
+def test_rebalance_decisions_are_logged(spark, caplog):
+    """Every rebalance_small_scan call logs one setu_spark.dispatch
+    record with the inputs of its choice and the choice."""
+    from setu_spark.sources import io
+
+    caplog.set_level(logging.INFO, logger="setu_spark.dispatch")
+    df = spark.range(10)
+    target = spark.sparkContext.defaultParallelism
+    split = io._session_split_bytes(spark)
+    io.rebalance_small_scan(df, input_bytes=target * split)
+    io.rebalance_small_scan(df, input_bytes=1)
+    io.rebalance_small_scan(df.repartition(target + 1))
+    recs = [
+        r for r in caplog.records
+        if r.name == "setu_spark.dispatch" and hasattr(r, "rebalance")
+    ]
+    assert [(r.input_bytes, r.scan_partitions, r.rebalance) for r in recs] == [
+        (target * split, None, False),
+        (1, None, True),
+        (None, target + 1, False),
+    ]
+    assert all(
+        (r.split_bytes, r.parallelism) == (split, target) for r in recs
+    )
 
 
 def test_q127_classifier_single_pass_kernel_no_join(spark):

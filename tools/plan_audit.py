@@ -21,8 +21,12 @@ a 200-column sketch buffer cannot)
                 shape so a refactor or Spark upgrade that drops a
                 broadcast to SMJ or adds a shuffle fails
                 tests/test_plan_fingerprints.py instead of surfacing
-                as a bench mystery. Update path after a REVIEWED plan
-                change: re-run --snapshot and commit the diff.
+                as a bench mystery. The sf0.001 section also pins
+                each query's construct_jobs: the Spark jobs that
+                building its frame starts (setJobGroup +
+                statusTracker), so a new eager probe fails CI too.
+                Update path after a REVIEWED plan change: re-run
+                --snapshot and commit the diff.
 """
 
 from __future__ import annotations
@@ -55,6 +59,11 @@ SNAPSHOT_SF_DIRS = (
     "/root/testdata/sf0.1",
 )
 
+#: the section that also pins each query's construction-job count (a
+#: count can move with data size, e.g. the CC loop's rounds, so only one
+#: scale factor carries it)
+JOBS_SF_DIR = SNAPSHOT_SF_DIRS[0]
+
 
 def snapshot(
     sf_dirs, out_path: str = SNAPSHOT_PATH
@@ -66,7 +75,7 @@ def snapshot(
     import json
 
     import __spark_entry__ as entrymod
-    from setu_spark.plans.inspect import plan_fingerprint
+    from setu_spark.plans.inspect import construct_jobs, plan_fingerprint
     from setu_spark.session import get_spark
 
     if isinstance(sf_dirs, str):
@@ -78,7 +87,10 @@ def snapshot(
         ledger: dict[str, dict] = {}
         for name, fn in sorted(entrymod.queries().items()):
             try:
-                ledger[name] = plan_fingerprint(fn(spark, sf_dir))
+                df, jobs = construct_jobs(spark, lambda: fn(spark, sf_dir))
+                ledger[name] = plan_fingerprint(df)
+                if sf_dir == JOBS_SF_DIR:
+                    ledger[name]["construct_jobs"] = jobs
             except Exception as exc:  # noqa: BLE001
                 ledger[name] = {"error": type(exc).__name__}
             finally:

@@ -28,28 +28,25 @@ import sys
 WINDOW = 50  # entries of queries() the driver checks per round
 
 #: the round whose window _FRONT currently pins (bump at each rotation)
-THIS_ROUND = 14
+THIS_ROUND = 15
 
 #: queries materially CHANGED in the current round that are NOT in the
 #: current window — they take the next round's first free slots so a
 #: behavior change never waits a full cycle for its driver hash row.
-#: Round 14 (optimization round 2/2): every query whose plan or
-#: construction path was restructured this round, all output-identical
-#: on the driver's corpora (per-change sf0.01 oracle sweeps +
-#: default-conf driver-sim MATCH, plus the round-close full sweeps) —
-#: the CC funnel five (rep_full elimination, carry columns, broadcast
-#: CC labels, raw banded pairs), the audit/cache set (q89/q140/q151/
-#: q123), the q127 kernel rewrite, the q141 action fusion, and the
-#: q24 rebalance revert.
+#: Round 15: every query whose plan the LSH bucket grouping moved (one
+#: grouped shuffle of band rows replaces the bucket self-join), whether
+#: in its final plan (q52, q58, q108, q133, q151) or in the funnel that
+#: connected components checkpoints while the query is built (q56, q125,
+#: q144, q149, q150), plus q93, whose band explode now carries the NULL
+#: guard.
 CHANGED: tuple[str, ...] = (
-    "q24_price_math_profile",
+    "q52_minhash_lsh_pairs",
     "q56_dedup_components",
-    "q89_bloom_decontamination",
-    "q123_semantic_dedup",
+    "q58_lsh_then_exact_jaccard",
+    "q93_cross_corpus_neardup",
+    "q108_editdist_verify",
     "q125_dedup_impact_audit",
-    "q127_classifier_quality_filter",
-    "q140_margin_ann_recall_audit",
-    "q141_bpe_compression_curve",
+    "q133_lsh_precision_audit",
     "q144_leak_free_split",
     "q149_component_source_purity",
     "q150_quality_survivor_delta",
